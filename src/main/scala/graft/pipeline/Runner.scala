@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Flatten
@@ -13,6 +14,15 @@ import graft.sources.{Archiver, RawJsonReader, Sinks}
   * Here it is one driver program: parse once, persist, derive the three
   * tables (DAG fan-out), write, archive (fan-in). The only process
   * boundaries left are the dedup/rank shuffles inside the transforms.
+  *
+  * The songs input is hash-partitioned by `scrape_date` into
+  * `defaultParallelism` partitions. That exchange satisfies the rank
+  * window's `partitionBy(scrape_date)`, so it replaces the window's own
+  * shuffle, and its explicit count keeps AQE from coalescing a small day
+  * set into one task. Each date still lands in one task (one file per
+  * `scrape_date=` dir), while the per-file write and commit work spreads
+  * over every core. Counts are observed on the parquet writes themselves,
+  * so no job re-runs a dedup or rank just to count.
   */
 object Runner {
 
@@ -24,22 +34,21 @@ object Runner {
     val raw = RawJsonReader.read(spark, landingDir)
       .persist(StorageLevel.MEMORY_AND_DISK) // G1: parse once, fan out 3×
 
-    val album = Flatten.albums(raw)
-    val artist = Flatten.artists(raw)
-    val songs = Flatten.songs(raw)
-
-    def write(df: DataFrame, name: String, partition: Seq[String]): Unit = {
-      Sinks.writeParquet(df, s"$outDir/$name", partitionCols = partition)
+    /** Writes one table; returns the rows the parquet write saw. */
+    def write(df: DataFrame, name: String, partition: Seq[String]): Long = {
+      val rows = Observation(name)
+      Sinks.writeParquet(df.observe(rows, count(lit(1)).as("n")), s"$outDir/$name",
+        partitionCols = partition)
       if (alsoCsv) Sinks.writeCsv(df, s"$outDir/csv/$name")
+      rows.get("n").asInstanceOf[Long]
     }
-    write(album, "album", Nil)
-    write(artist, "artist", Nil)
-    write(songs, "songs", Seq("scrape_date"))
-
-    val nAlbum = album.count()
-    val nArtist = artist.count()
-    val nSongs = songs.count()
-    raw.unpersist()
+    val (nAlbum, nArtist, nSongs) =
+      try {
+        val byDate = raw.repartition(spark.sparkContext.defaultParallelism, col("scrape_date"))
+        (write(Flatten.albums(raw), "album", Nil),
+          write(Flatten.artists(raw), "artist", Nil),
+          write(Flatten.songs(byDate), "songs", Seq("scrape_date")))
+      } finally raw.unpersist()
 
     // fan-in barrier: archive only after every branch wrote (T3)
     val archived = processedDir.map(Archiver.archive(spark, landingDir, _)).getOrElse(0)

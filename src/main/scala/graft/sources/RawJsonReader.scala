@@ -21,10 +21,16 @@ object RawJsonReader {
     * item, with `ord` (0-based array index) and `scrape_date` (from the
     * `spotify_raw_<yyyyMMddHHmmss>` filename, reference :68). */
   def read(spark: SparkSession, landingDir: String): DataFrame =
-    spark.read
+    items(spark.read
       .option("wholetext", "true")
       .option("pathGlobFilter", "*.json") // P6: suffix predicate at the scan
-      .text(landingDir)
+      .text(landingDir))
+
+  /** Whole-file text rows (`value`) → playlist items. Shared by the batch
+    * read and [[graft.streaming.StreamingLoader]]'s file stream, so both
+    * produce the same shape. */
+  def items(files: DataFrame): DataFrame =
+    files
       .select(
         input_file_name().as("src_file"),
         from_json(col("value"), Spotify.rawFile).as("items"))

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.model.Spotify
 import graft.operators.Flatten
 import graft.sources.RawJsonReader
 
@@ -26,26 +25,12 @@ object StreamingLoader {
 
   /** Raw landing dir → streaming DataFrame of playlist items with the
     * same shape RawJsonReader produces for batch. */
-  def readRawStream(spark: SparkSession, landingDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    spark.readStream
+  def readRawStream(spark: SparkSession, landingDir: String): DataFrame =
+    RawJsonReader.items(spark.readStream
       .format("text")
       .option("wholetext", "true")
       .option("pathGlobFilter", "*.json")
-      .load(landingDir)
-      .select(
-        input_file_name().as("src_file"),
-        from_json(col("value"), Spotify.rawFile).as("items"))
-      .select(
-        col("src_file"),
-        to_date(
-          unix_timestamp(
-            regexp_extract(col("src_file"), "spotify_raw_(\\d{14})", 1),
-            "yyyyMMddHHmmss").cast("timestamp")).as("scrape_date"),
-        posexplode(col("items")).as(Seq("ord", "item")))
-      .select(col("src_file"), col("scrape_date"), col("ord"),
-        col("item.added_at").as("added_at"), col("item.track").as("track"))
-  }
+      .load(landingDir))
 
   /** Start one incremental load: landing dir → parquet table dir. The
     * songs transform runs per micro-batch via foreachBatch because the

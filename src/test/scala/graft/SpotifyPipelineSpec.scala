@@ -1,7 +1,20 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, AQEShuffleReadExec}
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.operators.{Casts, Flatten}
 import graft.pipeline.Runner
@@ -136,5 +149,87 @@ class SpotifyPipelineSpec extends AnyFunSuite {
     graft.sources.Sinks.crawlCsv(spark, s"$out/csv/album", "crawled_album",
       location = Some(dir.resolve("crawled_album").toString))
     assert(spark.table("crawled_album").count() == 10)
+  }
+
+  test("runner: counts come from the writes; songs write one file per date over defaultParallelism tasks") {
+    val dir = SpotifyFixture.tempDir("graft-run-days")
+    val days = Seq("2025-08-01", "2025-08-02", "2025-08-03", "2025-08-04", "2025-08-05")
+    val l = SpotifyFixture.write(dir, days)
+    val out = dir.resolve("out").toString
+    val succeeded = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit = succeeded.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def songsParquetWrite(qe: QueryExecution) = qe.analyzed match {
+      case c: InsertIntoHadoopFsRelationCommand =>
+        c.fileFormat.isInstanceOf[ParquetFileFormat] && c.outputPath.getName == "songs"
+      case _ => false
+    }
+    spark.listenerManager.register(listener)
+    val (res, songsWrite) =
+      try {
+        val res = Runner.runBatch(spark, l, out, alsoCsv = true)
+        // listener events arrive asynchronously
+        res -> eventually(timeout(30.seconds))(succeeded.asScala.find(songsParquetWrite).get)
+      } finally spark.listenerManager.unregister(listener)
+    assert(res == Runner.Result(10, 7, 250, 0))
+
+    // each count equals the rows read back from the parquet table and its CSV twin
+    Seq("album" -> res.albums, "artist" -> res.artists, "songs" -> res.songs).foreach {
+      case (name, n) =>
+        assert(spark.read.parquet(s"$out/$name").count() == n, name)
+        assert(spark.read.option("header", "true").csv(s"$out/csv/$name").count() == n, name)
+    }
+
+    // one data file per scrape_date= directory, one per unpartitioned table
+    def dataFiles(d: java.io.File) = d.listFiles().toSeq.filter(f =>
+      f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+    val dateDirs = new java.io.File(s"$out/songs").listFiles().toSeq
+      .filter(_.getName.startsWith("scrape_date="))
+    assert(dateDirs.map(_.getName).sorted == days.map("scrape_date=" + _))
+    dateDirs.foreach(d => assert(dataFiles(d).size == 1, d.getName))
+    Seq("album", "artist").foreach(t => assert(dataFiles(new java.io.File(s"$out/$t")).size == 1, t))
+
+    // rank is exactly 1..50 within each date
+    val ranks = spark.read.parquet(s"$out/songs").groupBy("scrape_date")
+      .agg(sort_array(collect_list("rank")).as("r")).collect()
+    assert(ranks.length == days.size)
+    ranks.foreach(r => assert(r.getSeq[Int](1) == (1 to 50)))
+
+    // the songs write has one shuffle: the explicit date repartition, which
+    // the rank window reuses and AQE leaves at defaultParallelism partitions
+    val helper = new AdaptiveSparkPlanHelper {}
+    val plan = songsWrite.executedPlan
+    val shuffles = helper.collect(plan) { case s: ShuffleExchangeExec => s }
+    assert(shuffles.size == 1, plan.toString)
+    val dp = spark.sparkContext.defaultParallelism
+    assert(shuffles.head.shuffleOrigin == REPARTITION_BY_NUM)
+    shuffles.head.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.numPartitions == dp)
+        assert(h.expressions.map(_.sql) == Seq("scrape_date"))
+      case p => fail(s"unexpected partitioning $p")
+    }
+    assert(helper.collect(plan) { case r: AQEShuffleReadExec => r }.forall(!_.hasCoalescedPartition))
+  }
+
+  test("runner: an empty landing dir yields an all-zero result") {
+    val dir = SpotifyFixture.tempDir("graft-run-empty")
+    val l = SpotifyFixture.write(dir, Nil)
+    val res = Runner.runBatch(spark, l, dir.resolve("out").toString,
+      Some(dir.resolve("processed").toString), alsoCsv = true)
+    assert(res == Runner.Result(0, 0, 0, 0))
+  }
+
+  test("runner: a failed write releases the parsed input from the cache") {
+    val dir = SpotifyFixture.tempDir("graft-run-fail")
+    val l = SpotifyFixture.write(dir, Seq("2025-07-04"))
+    val out = java.nio.file.Files.createFile(dir.resolve("out")).toString // a file, not a dir
+    def parsedInputCached = spark.sharedState.cacheManager.lookupCachedData(
+      RawJsonReader.read(spark, l).asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+    assert(!parsedInputCached)
+    intercept[Exception](Runner.runBatch(spark, l, out))
+    assert(!parsedInputCached)
   }
 }
