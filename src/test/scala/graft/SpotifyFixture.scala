@@ -2,6 +2,11 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.LocalFileSystem
+
 /** Deterministic raw-JSON fixtures shaped per FIXTURES.md §A1: two daily
   * files with multi-artist tracks, duplicate album/artist ids, partial
   * release dates, and stable ordering so goldens are exact.
@@ -63,5 +68,38 @@ object SpotifyFixture {
     val p = Files.createTempDirectory(prefix)
     p.toFile.deleteOnExit()
     p
+  }
+
+  /** Data files under root, recursively: everything but hidden files
+    * (`.crc` sidecars) and `_`-prefixed markers and logs such as
+    * `_SUCCESS` and `_spark_metadata/`. */
+  def dataFilesUnder(root: Path): Seq[Path] = {
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_)).filter { f =>
+      root.relativize(f).iterator().asScala.forall { part =>
+        val name = part.toString
+        !name.startsWith(".") && !name.startsWith("_")
+      }
+    }.toList
+    finally walk.close()
+  }
+
+  /** Full `st_mode` (type and permission bits) of a path. */
+  def unixMode(p: Path): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int]
+
+  /** Data files under root that lack their `.crc` sidecar or whose mode
+    * differs from that of a file Hadoop's stock checksummed
+    * `LocalFileSystem` creates in refDir with its default permission. */
+  def localLayoutProblems(root: Path, refDir: Path): Seq[String] = {
+    val fs = new LocalFileSystem()
+    fs.initialize(java.net.URI.create("file:///"), new Configuration())
+    val ref = refDir.resolve("stock-reference")
+    fs.create(new org.apache.hadoop.fs.Path(ref.toUri)).close()
+    val stockMode = unixMode(ref)
+    dataFilesUnder(root).flatMap { f =>
+      val crc = f.resolveSibling(s".${f.getFileName}.crc")
+      (if (Files.exists(crc)) Nil else Seq(s"$f: no .crc")) ++
+        (if (unixMode(f) == stockMode) Nil else Seq(f"$f: mode ${unixMode(f)}%o, stock $stockMode%o"))
+    }
   }
 }

@@ -191,6 +191,13 @@ class SpotifyPipelineSpec extends AnyFunSuite {
     dateDirs.foreach(d => assert(dataFiles(d).size == 1, d.getName))
     Seq("album", "artist").foreach(t => assert(dataFiles(new java.io.File(s"$out/$t")).size == 1, t))
 
+    // every parquet and CSV data file has its .crc sidecar and the mode the
+    // stock Hadoop LocalFileSystem gives a file created in the same dir
+    val written = SpotifyFixture.dataFilesUnder(dir.resolve("out"))
+    assert(written.count(_.toString.endsWith(".parquet")) == days.size + 2)
+    assert(written.exists(_.toString.endsWith(".csv")))
+    assert(SpotifyFixture.localLayoutProblems(dir.resolve("out"), dir).isEmpty)
+
     // rank is exactly 1..50 within each date
     val ranks = spark.read.parquet(s"$out/songs").groupBy("scrape_date")
       .agg(sort_array(collect_list("rank")).as("r")).collect()

@@ -32,5 +32,9 @@ class StreamingIngestSpec extends AnyFunSuite {
     // rank restarts per scrape_date partition
     assert(songs.groupBy("scrape_date").agg(max("rank").as("mx"))
       .collect().forall(_.getAs[Int]("mx") == 50))
+
+    // every data file has its .crc sidecar and the stock LocalFileSystem mode
+    assert(SpotifyFixture.dataFilesUnder(dir.resolve("songs")).size >= 2)
+    assert(SpotifyFixture.localLayoutProblems(dir.resolve("songs"), dir).isEmpty)
   }
 }
