@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout.
@@ -60,69 +59,22 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle partitions sized to the DATA, not the cores: at sf0.1 a
-    // shuffle carries a few MB — 8 partitions keep every task non-trivial
-    // while AQE still coalesces the truly tiny exchanges. Measured: 8 vs
-    // 32 is ~10% off the suite total (fewer tasks to schedule per stage
-    // on 60+ small queries); heavy operators pin their own spread where
-    // it matters. At cluster SFs this knob scales with volume per the
-    // usual partitions ≈ bytes/128MB sizing.
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // V2 parquet read path: COUNT/MIN/MAX answered from footer
-      // metadata (aggregate pushdown) — verified oracle-equivalent at
-      // sf0.01 and sf0.1
-      .config("spark.sql.sources.useV1SourceList", "")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").toSeq // experiment overrides "k=v;k=v"
-      .flatMap(_.split(';')).map(_.split('=')).collect {
-        case Array(k, v) => builder.config(k.trim, v.trim)
-      }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val stageFiles = sys.env.getOrElse("SPARK_GRAFT_STAGE_FILES", "0").toInt
-    val runDir =
-      if (stageFiles <= 0) sfDir
-      else {
-        val staged = new java.io.File(
-          "target/bench-staged/" + new java.io.File(sfDir).getName).getAbsolutePath
-        Tables.stageLayout(spark, sfDir, staged, stageFiles)
-        staged
-      }
+    val sfDir = Session.sfDir
+    val spark = Session.build()
+    val runDir = Session.input(spark, sfDir)
 
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, runDir)
         .write.format("noop").mode("overwrite").save()
 
-    val hot = sys.env.get("SPARK_GRAFT_CACHE_TABLES").contains("1")
-    if (hot) Tables.hotCache(spark, runDir, cpus.toInt)
     // RDD ids of the pinned tables: everything else persisted during a
-    // query is query-local state and gets swept after it — EXCEPT the
-    // session-shared curation artifact (graft.operators.CurationOps):
-    // the near-dup pair/component tables are cross-query state by
-    // design (a cluster curation run materializes them once between
-    // stages and feeds dedup/keeper/overlap/reweighting from storage),
-    // so the sweep exempts their RDDs like the staged input tables.
-    // The derivation cost itself is paid inside whichever query touches
-    // the artifact first (the untimed warmup pass, by the same rule
-    // that amortizes JIT and parquet footers).
+    // query is query-local state and gets swept after it (Session.sweep
+    // also exempts the session-shared curation artifact). Its
+    // derivation cost is paid inside whichever query touches the
+    // artifact first (the untimed warmup pass, by the same rule that
+    // amortizes JIT and parquet footers).
     val pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    def sweep(): Unit = {
-      val keep = pinned ++ graft.operators.CurationOps.pinnedRddIds
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => keep(id) }
-        .values.foreach(_.unpersist(blocking = false))
-    }
+    def sweep(): Unit = Session.sweep(spark, pinned)
 
     // SPARK_GRAFT_ONLY="q32,q50" restricts the suite (local iteration on
     // hot queries without paying the full 67-query sweep)
@@ -153,23 +105,6 @@ object Bench {
     // narrative ("8 q00-floors" = 8 actions × ~11 jobs × per-job cost).
     val canaryName = "q00_counts"
     var canarySeq = 0
-    // statusTracker is fed by the async listener bus, so a read right
-    // after the last job can undercount (round-9 advice: an undercounted
-    // CANARY inflates the per-job floor and shrinks every floor_excess —
-    // the one direction the weak rule is blind to). Poll until two
-    // consecutive reads agree; the bus drains in ms, the cap is paranoia.
-    def jobsInGroup(gid: String): Int = {
-      var prev = spark.sparkContext.statusTracker.getJobIdsForGroup(gid).length
-      var tries = 0
-      while (tries < 40) {
-        Thread.sleep(25)
-        val cur = spark.sparkContext.statusTracker.getJobIdsForGroup(gid).length
-        if (cur == prev) return cur
-        prev = cur
-        tries += 1
-      }
-      prev
-    }
     def canaryFloor(): Double = {
       canarySeq += 1
       val gid = s"canary-$canarySeq"
@@ -178,7 +113,7 @@ object Bench {
       try run(canaryName) catch { case _: Throwable => () }
       val dt = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.clearJobGroup()
-      dt / math.max(jobsInGroup(gid), 1)
+      dt / math.max(Session.jobsInGroup(spark, gid), 1)
     }
     final case class Sample(sec: Double, jobs: Int, floor: Double)
     def timedPass(pass: Int): Map[String, Sample] = {
@@ -191,7 +126,7 @@ object Bench {
         try run(name) catch { case _: Throwable => () }
         val dt = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.clearJobGroup()
-        val jobs = jobsInGroup(gid)
+        val jobs = Session.jobsInGroup(spark, gid)
         // operators that persist() intermediates would otherwise accumulate
         // cached blocks across the 40+ queries and skew later timings
         sweep()
@@ -300,21 +235,8 @@ object Bench {
       else try {
         val oDir = new java.io.File("target/bench-oracle")
         oDir.mkdirs()
-        // JSON string escape: backslash, quote, and ALL control chars
-        def jq(s: String): String = "\"" + s.flatMap {
-          case '"'  => "\\\""
-          case '\\' => "\\\\"
-          case '\n' => "\\n"
-          case '\r' => "\\r"
-          case '\t' => "\\t"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        } + "\""
-        val oracleJson = SparkEntry.oracleSql
-          .filter { case (k, _) => names.contains(k) }
-          .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }.mkString("{", ",", "}")
         java.nio.file.Files.writeString(
-          oDir.toPath.resolve("oracle_sql.json"), oracleJson)
+          oDir.toPath.resolve("oracle_sql.json"), SparkEntry.oracleJson(names))
         val p = new ProcessBuilder(
           "python3", "tools/time_duckdb.py", oDir.getPath, sfDir).start()
         // the oracle suite runs warmup + min-of-3 over every query

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scaling-exponent probe: run the data-dominated queries at every
   * local SF (sf0.001 / sf0.01 / sf0.1 — 100× data spread) and report
@@ -132,35 +131,17 @@ object ScaleSweep {
       // linear through the broadcast join + partial agg)
       "q224_nested_drift", "q225_drop_drift", "q226_skewed_bigdim")
     val names = if (args.nonEmpty) args.toSeq else defaults
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
 
     // Query-local cached state is swept between runs, but the
     // session-shared CurationOps artifacts (near-dup pairs, BPE model,
     // kNN graph) are memoized with localCheckpoint-pinned RDDs whose
-    // memo entries survive the sweep — destroying their blocks while
-    // the memo still points at them turns every later reuse into
-    // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (the r8 sweep's q191/q120
-    // aborts). Same exemption contract as Bench.sweep: anything
-    // persisted BEFORE the timing loop plus CurationOps.pinnedRddIds
-    // (read per sweep — the memo grows as queries first touch it).
+    // memo entries survive the sweep (the r8 sweep's q191/q120 aborts
+    // came from destroying them). Same exemption contract as Bench:
+    // anything persisted BEFORE the timing loop plus
+    // CurationOps.pinnedRddIds.
     val preloopPinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    def sweep(): Unit = {
-      val keep = preloopPinned ++ graft.operators.CurationOps.pinnedRddIds
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => keep(id) }
-        .values.foreach(_.unpersist(blocking = false))
-    }
+    def sweep(): Unit = Session.sweep(spark, preloopPinned)
 
     def timeOne(name: String, dir: String): (Double, Boolean) = {
       def once(): (Double, Boolean) = {

@@ -466,4 +466,28 @@ object SparkEntry {
       ORDER BY s.s_name""",
   ).++(CorpusOracles.sql).++(SpotifyParity.oracle)
     .map { case (k, v) => k -> v.stripMargin.trim.replaceAll("\\s+", " ") }
+
+  /** `oracleSql` restricted to `names`, as the `oracle_sql.json` that
+    * tools/check_oracle.py and tools/time_duckdb.py read. */
+  def oracleJson(names: Iterable[String]): String = {
+    val keep = names.toSet
+    jsonObject(oracleSql.filter { case (k, _) => keep(k) })
+  }
+
+  /** A flat JSON object of strings. Escapes backslash, quote and ALL
+    * control chars (<0x20): a tab or CR in a query's SQL would
+    * otherwise make the reader's json.load fail and silently zero the
+    * round's correctness. */
+  private[graft] def jsonObject(kvs: Iterable[(String, String)]): String = {
+    def q(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    kvs.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+  }
 }

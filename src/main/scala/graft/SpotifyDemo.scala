@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.Flatten
 import graft.pipeline.Runner
 import graft.queries.SpotifyQueries
@@ -23,14 +21,7 @@ object SpotifyDemo {
       Files.createTempDirectory("spotify-out").toString)
     require(Files.exists(Paths.get(landing)), s"landing dir not found: $landing")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("spotify-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build("spark.app.name" -> "spotify-demo")
 
     val res = Runner.runBatch(spark, landing, out, processedDir = None, alsoCsv = true)
     println(s"[demo] batch result: $res → $out")
