@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Per-query profiler for A/Bs and plan audits. It runs in Bench's
   * session on Bench's input (Session.build, Session.input), so what it
@@ -21,8 +22,10 @@ import org.apache.spark.sql.SparkSession
   *  - no flag: time every rep (`[qbench] <query> rep <i>: <s> s`).
   *  - `--jobs`: every Spark JOB of each query's last rep — duration,
   *    stages, tasks and the job's description or short callsite
-  *    property, when it has one — so job-count reduction work
-  *    (each AQE query stage / broadcast build / checkpoint
+  *    property, else (SQL and AQE jobs carry neither) the innermost
+  *    `graft.` frame of its SQL execution's call stack, the rule
+  *    `etlbench/Trace.scala` attributes jobs by — so job-count
+  *    reduction work (each AQE query stage / broadcast build / checkpoint
   *    materialization is one job, and locally each job pays the box's
   *    ~30-60 ms scheduling floor) starts from a measurement instead of
   *    a plan guess.
@@ -92,10 +95,17 @@ object Profile {
     val starts = mutable.Map.empty[Int, (Long, String, String, Int)]
     val stageJob = mutable.Map.empty[Int, Int]
     val tasks = mutable.Map.empty[Int, Int].withDefaultValue(0)
+    val execFrame = mutable.Map.empty[String, String]
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          execFrame(x.executionId.toString) = repoFrame(x.details)
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-        val desc = prop("spark.job.description").orElse(prop("callSite.short")).getOrElse("")
+        val desc = prop("spark.job.description").orElse(prop("callSite.short"))
+          .orElse(prop("spark.sql.execution.id").flatMap(execFrame.get)).getOrElse("")
         starts(e.jobId) = (e.time, prop("spark.jobGroup.id").getOrElse(""), desc,
           e.stageIds.length)
         e.stageIds.foreach(stageJob(_) = e.jobId)
@@ -130,6 +140,12 @@ object Profile {
       }
     }
   }
+
+  /** The innermost `graft.` frame of a call stack, without its file and
+    * line: `graft.operators.PowerIteration.run`. */
+  private def repoFrame(stack: String): String =
+    stack.linesIterator.map(_.trim).find(_.startsWith("graft."))
+      .map(_.takeWhile(_ != '(').replace("$", "")).getOrElse("")
 
   private def alloc(names: Seq[String], reps: Int, sfDir: String,
       run: String => Unit, sweep: () => Unit): Unit = {

@@ -2,6 +2,8 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Bridge between graft's custom Catalyst expressions and the public
   * Column API. `ExpressionUtils` (and friends) are `private[sql]` in
@@ -78,6 +80,58 @@ package object graftsql {
       options, columnPruning = false, tz)
     new org.apache.spark.sql.catalyst.csv.CSVInferSchema(csvOpts)
       .infer(cells, header)
+  }
+
+  /** A clone of `spark` with artifact isolation off, to start streaming
+    * queries from, so that their generated code compiles once per JVM
+    * rather than once per query start.
+    *
+    * Why: Spark keys its codegen cache on (class loader, source): the
+    * key of `CodeGenerator.cache` is `Tuple2<HashableWeakReference,
+    * CodeAndComment>`. `writeStream.start()` runs every query on a fresh
+    * clone of the session it was built on
+    * (`StreamExecution.sparkSessionForStream`), and every clone has a new
+    * session UUID. With `spark.sql.artifact.isolation.enabled` (default
+    * true), `ArtifactManager.state` tags each of that clone's jobs with
+    * its UUID, and the executor builds one class loader per UUID
+    * (`Executor.isolatedSessionCache`). So each start ran under new
+    * loaders, missed the cache and compiled the same classes again.
+    *
+    * The clone (`cloneSession()`, `private[sql]`) keeps the caller's
+    * conf, temp views and functions as they are at the call. Only the
+    * clone's conf turns isolation off, and Spark's per-query clone of it
+    * inherits that, so the query's jobs carry no artifact state and run
+    * under the executor's default loader. The caller's conf is never
+    * written.
+    *
+    * Trade-off: a query started from the clone belongs to the clone's
+    * `StreamingQueryManager`. It is not listed in the caller's
+    * `spark.streams`, and the caller's `StreamingQueryListener`s do not
+    * see it. Artifacts added to the caller's session (`addArtifact`) are
+    * not visible to its tasks.
+    *
+    * Every `StreamingQueryManager` puts its own listener bus on the
+    * context's listener bus and never takes it off. The clone's manager
+    * has no listeners, so its bus comes off here; otherwise each call
+    * would leave one more bus there for the life of the context, and
+    * every later streaming event would be dispatched to all of them.
+    * Listeners added to the clone's `streams` later see only
+    * `QueryStartedEvent`s. */
+  def sharedLoaderSession(spark: SparkSession): SparkSession = {
+    val clone = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+    clone.conf.set(
+      org.apache.spark.sql.internal.SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, false)
+    val marker = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    clone.streams.addListener(marker)
+    val bus = clone.sparkContext.listenerBus
+    bus.findListenersByClass[StreamingQueryListenerBus]()
+      .filter(_.listeners.contains(marker)).foreach(bus.removeListener)
+    clone.streams.removeListener(marker)
+    clone
   }
 
   /** Install the top-k-per-key rewrite + strategy on a live session (the

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -36,5 +37,39 @@ class StreamingIngestSpec extends AnyFunSuite {
     // every data file has its .crc sidecar and the stock LocalFileSystem mode
     assert(SpotifyFixture.dataFilesUnder(dir.resolve("songs")).size >= 2)
     assert(SpotifyFixture.localLayoutProblems(dir.resolve("songs"), dir).isEmpty)
+  }
+
+  test("a warm day's loadSongs compiles no generated code and leaves the caller's conf alone") {
+    val dir = SpotifyFixture.tempDir("graft-stream-codegen")
+    val out = dir.resolve("songs").toString
+    val ckpt = dir.resolve("ckpt").toString
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    val callerIsolation = spark.conf.getOption(isolation)
+
+    /** Lands one day, drains it; returns the codegen compile time the drain added. */
+    def day(d: String): Long = {
+      val landing = SpotifyFixture.write(dir, Seq(d))
+      val t0 = CodeGenerator.compileTime
+      StreamingLoader.loadSongs(spark, landing, out, ckpt).awaitTermination()
+      CodeGenerator.compileTime - t0
+    }
+    def rows = spark.read.parquet(out).count()
+
+    day("2025-07-01")
+    assert(rows == 50)
+    day("2025-07-02")
+    assert(rows == 100)
+    // the third day's stage code is byte-identical to the second's: a query
+    // start that reuses the codegen cache compiles nothing
+    assert(day("2025-07-03") == 0L)
+    assert(rows == 150)
+    assert(spark.conf.getOption(isolation) == callerIsolation)
+
+    // a re-run with no new file still ingests nothing
+    StreamingLoader.loadSongs(spark, dir.resolve("to_process").toString, out, ckpt)
+      .awaitTermination()
+    assert(rows == 150)
+    assert(spark.read.parquet(out).groupBy("scrape_date").count()
+      .collect().forall(_.getLong(1) == 50))
   }
 }
