@@ -6,20 +6,18 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 
-/** The reference's literal analysis workload (Q1–Q4 at
+/** The reference's analysis workload (Q1–Q4 at
   * snowflake-pipeline-query/spotify-analysis.sql:92-126), hash-gated by
-  * the DuckDB oracle.
+  * the DuckDB oracle as q62–q65. The query bodies are
+  * [[SpotifyQueries]]'s; this object holds only the tables they run over
+  * and the DuckDB twin of those tables and queries.
   *
   * The driver's oracle sees only the ten synthetic parquet tables, so the
   * spotify star schema is DERIVED — identically in both engines — from
   * lineitem/part: `songs` is the daily top-50 chart of parts by shipped
   * quantity (parts recur across days, so rank trajectories exist — the
   * property Q2/Q4 are about, and which the reference's per-scrape_date
-  * rank generation produces), `album` is the brand dimension. On top of
-  * that derivation each query keeps the reference SQL's literal shape
-  * with two determinism anchors (SURVEY §3.3): CURRENT_DATE becomes the
-  * corpus max date, and ORDER BY ties get the id tiebreak the reference
-  * leaves unspecified.
+  * rank generation produces), `album` is the brand dimension.
   *
   * Scale notes: the chart derivation is a two-level hash aggregate
   * followed by the native TopKPerKey rewrite (the `rank <= 50` filter
@@ -59,56 +57,33 @@ object SpotifyParity {
       .select("song_id", "song_name", "artist_id", "album_id", "rank", "scrape_date")
   }
 
+  /** The brand dimension, its title in `name` as in `Flatten.albums`. */
   private def album(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "part")
       .select(col("p_brand").as("album_id")).distinct()
-      .select(col("album_id"), concat(lit("Album "), col("album_id")).as("album_name"))
+      .select(col("album_id"), concat(lit("Album "), col("album_id")).as("name"))
 
-  /** Q1 — top 10 trending songs in the last 7 days
-    * (spotify-analysis.sql:92-97). */
-  def q1TrendingSongs(spark: SparkSession, dir: String): DataFrame = {
-    val s = songs(spark, dir)
-    val mx = s.agg(max(col("scrape_date")).as("max_d"))
-    s.crossJoin(broadcast(mx))
-      .filter(col("scrape_date") >= col("max_d") - expr("INTERVAL 7 DAYS"))
-      .select("song_id", "song_name", "artist_id", "album_id", "rank", "scrape_date")
-      .orderBy(asc("rank"), asc("scrape_date"), asc("song_id"))
-      .limit(10)
-  }
+  // q62–q65: SpotifyQueries' Q1–Q4 over the derived chart.
+  def q1TrendingSongs(spark: SparkSession, dir: String): DataFrame =
+    SpotifyQueries.q1Trending(songs(spark, dir))
 
-  /** Q2 — album popularity (avg rank) over time
-    * (spotify-analysis.sql:99-108). */
   def q2AlbumPopularity(spark: SparkSession, dir: String): DataFrame =
-    songs(spark, dir)
-      .join(album(spark, dir), Seq("album_id"))
-      .groupBy("album_id", "album_name", "scrape_date")
-      .agg(avg(col("rank")).as("avg_rank"))
-      .orderBy("album_id", "scrape_date")
+    SpotifyQueries.q2AlbumPopularity(songs(spark, dir), album(spark, dir))
 
-  /** Q3 — artists with the most top-10 entries
-    * (spotify-analysis.sql:110-117). */
   def q3TopArtists(spark: SparkSession, dir: String): DataFrame =
-    songs(spark, dir)
-      .filter(col("rank") <= 10)
-      .groupBy("artist_id")
-      .agg(count(lit(1)).as("top_10_appearances"))
-      .orderBy(desc("top_10_appearances"), asc("artist_id"))
-      .limit(10)
+    SpotifyQueries.q3TopArtists(songs(spark, dir))
 
-  /** Q4 — daily chart movement of a song (spotify-analysis.sql:119-126);
-    * the reference's `<song_id_here>` placeholder becomes the
-    * deterministic pick "most charted song" (ties → lowest id). */
+  /** Q4 follows the most-charted song, the deterministic stand-in for the
+    * reference's `<song_id_here>` placeholder. */
   def q4ChartMovement(spark: SparkSession, dir: String): DataFrame = {
     val s = songs(spark, dir)
-    val pick = s.groupBy("song_id").agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), asc("song_id")).limit(1).select("song_id")
-    s.join(broadcast(pick), Seq("song_id"))
+    SpotifyQueries.q4ChartMovement(s, SpotifyQueries.mostCharted(s))
       .select("scrape_date", "rank")
-      .orderBy("scrape_date")
   }
 
   /** Shared derivation CTE for the DuckDB oracle — the exact twin of
-    * [[songs]]/[[album]]. */
+    * [[songs]]/[[album]] (the album title is `album_name` here, `name`
+    * there; Q2 outputs it as `album_name` in both engines). */
   private val derivationCte: String =
     """WITH daily AS (
          SELECT CAST(l_shipdate AS DATE) AS scrape_date, l_partkey AS song_id,

@@ -1,15 +1,22 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The reference's analysis workload, Q0-Q4 (SURVEY §3.3), as DataFrame
-  * programs over the flat tables. SQL twins in `sql` run via `spark.sql`
-  * after `register`.
+  * programs over the flat tables. This is the one body of each query:
+  * the ETL face runs them over the tables `Runner`/`StreamingLoader`
+  * write, and `SpotifyParity` (q62–q65) runs them over its derived chart
+  * under the DuckDB oracle. Q2 also has a SQL twin in `sql`, run via
+  * `spark.sql` after `register`.
   *
   * Sources: snowflake-pipeline-query/spotify-analysis.sql:84-126 ≡
   * GlueCrawler-Athena/athena_spotify_analysis.sql:1-40, with the §1.4
-  * reconciliation (`album.name`, engine-generated rank/scrape_date).
+  * reconciliation (`album.name`, engine-generated rank/scrape_date) and
+  * two determinism anchors: CURRENT_DATE becomes the songs table's max
+  * date, and ORDER BY ties get the id tiebreak the reference leaves
+  * unspecified.
   *
   * Q2's broken `a.album_name` reference (spotify-analysis.sql:102 vs DDL
   * `name_` :29) is fixed per SURVEY §1.4.2: the column is `name`, aliased
@@ -39,7 +46,7 @@ object SpotifyQueries {
     val anchor = songs.agg(max(col("scrape_date")).as("max_d"))
     songs.crossJoin(broadcast(anchor))
       .filter(col("scrape_date") >= date_sub(col("max_d"), 7))
-      .select("song_name", "rank", "scrape_date", "song_id")
+      .select("song_id", "song_name", "artist_id", "album_id", "rank", "scrape_date")
       .orderBy(asc("rank"), asc("scrape_date"), asc("song_id"))
       .limit(10)
   }
@@ -53,47 +60,40 @@ object SpotifyQueries {
       .orderBy("album_id", "scrape_date")
 
   /** Q3: artists with most top-10 appearances
-    * (spotify-analysis.sql:110-118); artist name resolved via the implied
-    * FK join (SURVEY §2.4 J2). */
-  def q3TopArtists(songs: DataFrame, artist: DataFrame): DataFrame =
+    * (spotify-analysis.sql:110-118), literally: no artist-name join. */
+  def q3TopArtists(songs: DataFrame): DataFrame =
     songs.filter(col("rank") <= 10)
-      .join(broadcast(artist), Seq("artist_id"))
-      .groupBy(col("artist_id"), col("artist_name"))
+      .groupBy("artist_id")
       .agg(count(lit(1)).as("top_10_appearances"))
       .orderBy(desc("top_10_appearances"), asc("artist_id"))
       .limit(10)
 
   /** Q4: daily chart movement of one song (spotify-analysis.sql:120-126),
-    * plus the lag delta the query invites (SURVEY §2.8 W3). */
-  def q4ChartMovement(songs: DataFrame, songId: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    * plus the lag delta the query invites (SURVEY §2.8 W3). `songId` is
+    * the reference's `<song_id_here>`: a literal or [[mostCharted]]. */
+  def q4ChartMovement(songs: DataFrame, songId: Column): DataFrame = {
     val w = Window.partitionBy(col("song_id")).orderBy(col("scrape_date"))
-    songs.filter(col("song_id") === lit(songId))
+    songs.filter(col("song_id") === songId)
       .select(col("song_id"), col("song_name"), col("rank"), col("scrape_date"))
       .withColumn("rank_change", col("rank") - lag(col("rank"), 1).over(w))
       .orderBy("scrape_date")
   }
 
-  /** SQL twins (runnable via spark.sql after register). */
+  def q4ChartMovement(songs: DataFrame, songId: String): DataFrame =
+    q4ChartMovement(songs, lit(songId))
+
+  /** The most-charted song (most rows in `songs`, ties → lowest id), as a
+    * scalar subquery: the deterministic pick for Q4's placeholder. */
+  def mostCharted(songs: DataFrame): Column =
+    songs.groupBy("song_id").agg(count(lit(1)).as("n"))
+      .orderBy(desc("n"), asc("song_id")).limit(1).select("song_id")
+      .scalar()
+
+  /** SQL twin of Q2 (runnable via spark.sql after register). */
   val sql: Map[String, String] = Map(
-    "q0" -> ("SELECT 'album' AS tbl, count(*) AS n FROM album UNION ALL " +
-      "SELECT 'artist', count(*) FROM artist UNION ALL " +
-      "SELECT 'songs', count(*) FROM songs ORDER BY tbl"),
-    "q1" -> """SELECT song_name, rank, scrape_date, song_id FROM songs
-      WHERE scrape_date >= date_sub((SELECT max(scrape_date) FROM songs), 7)
-      ORDER BY rank ASC, scrape_date ASC, song_id ASC LIMIT 10""",
     "q2" -> """SELECT s.album_id, a.name AS album_name, s.scrape_date,
         avg(s.rank) AS avg_rank
       FROM songs s JOIN album a ON s.album_id = a.album_id
       GROUP BY s.album_id, a.name, s.scrape_date
-      ORDER BY s.album_id, s.scrape_date""",
-    "q3" -> """SELECT s.artist_id, a.artist_name,
-        count(*) AS top_10_appearances
-      FROM songs s JOIN artist a ON s.artist_id = a.artist_id
-      WHERE s.rank <= 10
-      GROUP BY s.artist_id, a.artist_name
-      ORDER BY top_10_appearances DESC, s.artist_id ASC LIMIT 10""",
-    "q4" -> """SELECT song_id, song_name, rank, scrape_date,
-        rank - lag(rank, 1) OVER (PARTITION BY song_id ORDER BY scrape_date) AS rank_change
-      FROM songs WHERE song_id = {songId} ORDER BY scrape_date""")
+      ORDER BY s.album_id, s.scrape_date""")
 }

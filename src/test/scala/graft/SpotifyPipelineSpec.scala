@@ -102,7 +102,10 @@ class SpotifyPipelineSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(q0 == Map("album" -> 10L, "artist" -> 7L, "songs" -> 100L))
 
-    val q1 = SpotifyQueries.q1Trending(songs).collect()
+    val q1df = SpotifyQueries.q1Trending(songs)
+    assert(q1df.columns.toSeq ==
+      Seq("song_id", "song_name", "artist_id", "album_id", "rank", "scrape_date"))
+    val q1 = q1df.collect()
     assert(q1.length == 10)
     assert(q1.map(_.getAs[Int]("rank")).toSeq == Seq(1, 1, 2, 2, 3, 3, 4, 4, 5, 5))
 
@@ -111,12 +114,40 @@ class SpotifyPipelineSpec extends AnyFunSuite {
     assert(q2.columns.toSeq ==
       Seq("album_id", "album_name", "scrape_date", "avg_rank"))
 
-    val q3 = SpotifyQueries.q3TopArtists(songs, artist).collect()
-    assert(q3.nonEmpty)
-    assert(q3.map(_.getAs[Long]("top_10_appearances")).max <= 20L)
+    val q3df = SpotifyQueries.q3TopArtists(songs)
+    assert(q3df.columns.toSeq == Seq("artist_id", "top_10_appearances"))
+    val q3 = q3df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val direct = songs.filter(col("rank") <= 10).groupBy("artist_id").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(direct.size == 7 && q3 == direct) // all 7 artists fit in the top 10
 
     val q4 = SpotifyQueries.q4ChartMovement(songs, "t2025-07-01-5").collect()
     assert(q4.length == 1 && q4.head.getAs[Any]("rank_change") == null)
+
+    val picked = spark.range(1).select(SpotifyQueries.mostCharted(songs)).head().getString(0)
+    val byPick = SpotifyQueries.q4ChartMovement(songs, SpotifyQueries.mostCharted(songs))
+    assert(byPick.collect().toSeq ==
+      SpotifyQueries.q4ChartMovement(songs, picked).collect().toSeq)
+  }
+
+  test("mostCharted: the song with the most chart rows, ties to the lowest song_id") {
+    import spark.implicits._
+    val (d1, d2, d3) = (java.sql.Date.valueOf("2025-07-01"),
+      java.sql.Date.valueOf("2025-07-02"), java.sql.Date.valueOf("2025-07-03"))
+    // b and a chart twice each, b first; c once
+    val tied = Seq(("b", 1, d1), ("a", 2, d1), ("b", 1, d2), ("a", 3, d2), ("c", 4, d2))
+      .toDF("song_id", "rank", "scrape_date")
+    def pick(songs: org.apache.spark.sql.DataFrame) =
+      spark.range(1).select(SpotifyQueries.mostCharted(songs)).head().getString(0)
+    assert(pick(tied) == "a")
+    // a higher count beats a lower id
+    assert(pick(tied.union(Seq(("c", 5, d1), ("c", 6, d3)).toDF())) == "c")
+
+    val songs = tied.withColumn("song_name", concat(lit("Song "), col("song_id")))
+    val q4 = SpotifyQueries.q4ChartMovement(songs, SpotifyQueries.mostCharted(songs))
+      .select("song_id", "rank", "rank_change").collect()
+      .map(r => (r.getString(0), r.getInt(1), Option(r.get(2)))).toSeq
+    assert(q4 == Seq(("a", 2, None), ("a", 3, Some(1))))
   }
 
   test("SQL twins match the DataFrame programs (Q2)") {
