@@ -70,11 +70,16 @@ object SpotifyQueries {
 
   /** Q4: daily chart movement of one song (spotify-analysis.sql:120-126),
     * plus the lag delta the query invites (SURVEY §2.8 W3). `songId` is
-    * the reference's `<song_id_here>`: a literal or [[mostCharted]]. */
+    * the reference's `<song_id_here>`: a literal or [[mostCharted]].
+    *
+    * The filtered rows all share one `song_id`, so one exchange into a
+    * single partition serves both the window and the final sort: a scan
+    * stage and a single-partition stage, with no range-sampling job. */
   def q4ChartMovement(songs: DataFrame, songId: Column): DataFrame = {
     val w = Window.partitionBy(col("song_id")).orderBy(col("scrape_date"))
     songs.filter(col("song_id") === songId)
       .select(col("song_id"), col("song_name"), col("rank"), col("scrape_date"))
+      .repartition(1)
       .withColumn("rank_change", col("rank") - lag(col("rank"), 1).over(w))
       .orderBy("scrape_date")
   }

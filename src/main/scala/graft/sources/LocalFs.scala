@@ -1,17 +1,18 @@
 package graft.sources
 
-import java.io.FileNotFoundException
+import java.io.{File, FileNotFoundException, IOException}
 import java.net.URI
 import java.nio.file.{FileSystems, Files, NoSuchFileException}
 import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FSLinkResolver, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
 
-/** The local (`file:`) file system with permission bits set in-process.
+/** The local (`file:`) file system with permission bits set and link
+  * status read in-process.
   *
   * Why: without libhadoop (`NativeCodeLoader` warns "Unable to load
   * native-hadoop library" at start), Hadoop 3.4.2's
@@ -42,6 +43,20 @@ import org.apache.hadoop.io.nativeio.NativeIO
   *    attribute view. This is checked once per JVM, not per file store:
   *    both paths reach the same chmod(2), so a mount that rejects one
   *    rejects the other.
+  *
+  * Link status has the same trap. Spark's streaming checkpoint manager
+  * commits each offset, commit and source-log file as a temp file renamed
+  * over its name through FileContext. `AbstractFileSystem.renameInternal`
+  * asks `getFileLinkStatus` of the source and the destination;
+  * `DelegateToFileSystem` passes that to `RawLocalFileSystem.getFileLinkStatus`,
+  * whose default (deprecated) path, `deprecatedGetFileLinkStatusInternal`,
+  * calls `FileUtil.readLink`: `Shell.execCommand("readlink", …)`, once for
+  * the data file and once for its `.crc`, so two forks per rename.
+  * `getFileLinkStatus` and `getLinkTarget` keep that path's semantics and
+  * only read the link with `Files.isSymbolicLink` and
+  * `Files.readSymbolicLink`. They take no `inProcess` guard: link status
+  * has no native-IO route (the stock method forks `readlink` with or
+  * without libhadoop), and neither call needs the `unix` attribute view.
   *
   * `src/main/resources/core-site.xml` registers the two checksummed
   * wrappers for `file:`, so every `Configuration` built from the classpath
@@ -81,6 +96,33 @@ class NoForkRawLocalFileSystem extends RawLocalFileSystem {
       }
     }
   }
+
+  override def getFileLinkStatus(p: Path): FileStatus = {
+    val fi = linkStatus(p)
+    if (fi.isSymlink)
+      fi.setSymlink(FSLinkResolver.qualifySymlinkTarget(getUri, fi.getPath, fi.getSymlink))
+    fi
+  }
+
+  override def getLinkTarget(p: Path): Path = linkStatus(p).getSymlink
+
+  /** Hadoop's `deprecatedGetFileLinkStatusInternal` with the link read
+    * in-process: a link gets the symlink status over the followed
+    * `getFileStatus`, a dangling link the zero-length one, a missing path
+    * `FileNotFoundException`. */
+  private def linkStatus(p: Path): FileStatus = {
+    val target = readLink(p)
+    try {
+      val fs = getFileStatus(p)
+      if (target.isEmpty) fs
+      else new FileStatus(fs.getLen, false, fs.getReplication, fs.getBlockSize,
+        fs.getModificationTime, fs.getAccessTime, fs.getPermission, fs.getOwner, fs.getGroup,
+        new Path(target), p)
+    } catch {
+      case _: FileNotFoundException if target.nonEmpty =>
+        new FileStatus(0, false, 0, 0, 0, 0, FsPermission.getDefault, "", "", new Path(target), p)
+    }
+  }
 }
 
 object NoForkRawLocalFileSystem {
@@ -91,6 +133,16 @@ object NoForkRawLocalFileSystem {
 
   private lazy val inProcess =
     !NativeIO.isAvailable && FileSystems.getDefault.supportedFileAttributeViews.contains("unix")
+
+  /** `FileUtil.readLink` without its `readlink` process: the trimmed link
+    * target, `""` for anything that is not a link. It reads the link at
+    * `new File(p.toString)`, as Hadoop does, so a scheme-qualified path
+    * (`file:/…`) names a relative file and reads `""` there too. */
+  private def readLink(p: Path): String =
+    try {
+      val link = new File(p.toString).toPath
+      if (Files.isSymbolicLink(link)) Files.readSymbolicLink(link).toString.trim else ""
+    } catch { case _: IOException => "" }
 }
 
 /** `fs.file.impl`: the stock checksummed `LocalFileSystem` over

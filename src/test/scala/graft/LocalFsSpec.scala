@@ -1,14 +1,16 @@
 package graft
 
-import java.io.RandomAccessFile
+import java.io.{IOException, RandomAccessFile}
 import java.net.URI
-import java.nio.file.{Files, Path => JPath}
+import java.nio.file.{Files, Paths, Path => JPath}
 import java.util.EnumSet
 
 import scala.jdk.CollectionConverters._
 
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileContext, FileSystem, FSDataInputStream, LocalFileSystem, Options, Path}
+import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileContext, FileStatus, FileSystem, FSDataInputStream, LocalFileSystem, Options, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -151,6 +153,88 @@ class LocalFsSpec extends AnyFunSuite {
     val fcOut = fc.create(hpath(viaFc), EnumSet.of(CreateFlag.CREATE), Options.CreateOpts.createParent())
     try fcOut.write(bytes) finally fcOut.close()
     corruptAndRead(viaFc)
+  }
+
+  /** What a caller can see of a link-status or link-target call: the
+    * status fields, or the exception class and message. */
+  private def seen[A](call: => A)(show: A => String): String =
+    try show(call) catch { case e: IOException => s"${e.getClass.getName}: ${e.getMessage}" }
+
+  private def statusFacts(st: FileStatus): String =
+    s"link=${st.isSymlink} target=${if (st.isSymlink) st.getSymlink else "-"} len=${st.getLen} " +
+      s"dir=${st.isDirectory} path=${st.getPath}"
+
+  test("link status and link target match the stock classes through FileSystem and FileContext") {
+    val root = SpotifyFixture.tempDir("graft-localfs-links")
+    Files.write(root.resolve("file"), Array.fill[Byte](123)(7))
+    Files.createDirectory(root.resolve("dir"))
+    Files.createSymbolicLink(root.resolve("link"), Paths.get("file"))
+    Files.createSymbolicLink(root.resolve("dangling"), Paths.get("nowhere"))
+    val names = Seq("file", "dir", "link", "dangling", "missing")
+    // Hadoop reads the link at new File(path.toString): a bare path finds
+    // it, a file:-qualified one names a relative file and never does
+    val forms = Seq[JPath => Path](p => new Path(p.toString), hpath)
+
+    /** (api, name, form) -> what getFileLinkStatus and getLinkTarget show. */
+    def facts(stock: Boolean): Map[String, String] = {
+      val fs = FileSystem.newInstance(fileUri, conf(stock))
+      val fc = FileContext.getFileContext(fileUri, conf(stock))
+      val apis = Seq[(String, Path => FileStatus, Path => Path)](
+        ("fs", fs.getFileLinkStatus, fs.getLinkTarget),
+        ("fc", fc.getFileLinkStatus, fc.getLinkTarget))
+      try (for (name <- names; (form, i) <- forms.zipWithIndex; (api, status, target) <- apis) yield {
+        val p = form(root.resolve(name))
+        s"$api $name form$i" -> s"${seen(status(p))(statusFacts)} | ${seen(target(p))(_.toString)}"
+      }).toMap finally fs.close()
+    }
+
+    val (stock, noFork) = (facts(stock = true), facts(stock = false))
+    assert(noFork.size == names.size * forms.size * 2)
+    assert(noFork == stock)
+    // not vacuous: the bare form sees both links, a missing path and a non-link
+    Seq("fs", "fc").foreach { api =>
+      def bare(name: String) = noFork(s"$api $name form0")
+      assert(bare("link").startsWith("link=true") && bare("link").endsWith("| file"), bare("link"))
+      assert(bare("dangling").startsWith("link=true") && bare("dangling").contains("nowhere len=0"),
+        bare("dangling"))
+      assert(bare("missing").startsWith("java.io.FileNotFoundException"), bare("missing"))
+      assert(bare("file").contains("len=123") && bare("file").endsWith("is not a symbolic link"), bare("file"))
+      assert(bare("dir").contains("dir=true"), bare("dir"))
+    }
+  }
+
+  /** Process starts (JFR `jdk.ProcessStart`) on this thread while a
+    * streaming checkpoint log commit runs: a FileContext create of a temp
+    * file, then a rename over the existing log file. Returns the started
+    * commands. JFR records the whole JVM, and sessions left by other suites
+    * in the same test JVM start `rm` on Spark's cleaner thread when
+    * collected, so only this thread's starts count. */
+  private def processStartsInLogCommit(stock: Boolean): Seq[String] = {
+    val dir = SpotifyFixture.tempDir("graft-localfs-commit")
+    val fc = FileContext.getFileContext(fileUri, conf(stock))
+    val (tmp, log) = (hpath(dir.resolve("log/.0.tmp")), hpath(dir.resolve("log/0")))
+    fc.create(log, EnumSet.of(CreateFlag.CREATE), Options.CreateOpts.createParent()).close()
+    val recording = new Recording()
+    try {
+      recording.enable("jdk.ProcessStart")
+      recording.start()
+      val out = fc.create(tmp, EnumSet.of(CreateFlag.CREATE), Options.CreateOpts.createParent())
+      try out.write("v1\n{}".getBytes) finally out.close()
+      fc.rename(tmp, log, Options.Rename.OVERWRITE)
+      recording.stop()
+      val dump = dir.resolve("starts.jfr")
+      recording.dump(dump)
+      val self = Thread.currentThread.getId
+      RecordingFile.readAllEvents(dump).asScala
+        .filter(e => e.getThread != null && e.getThread.getJavaThreadId == self)
+        .map(_.getString("command")).toSeq
+    } finally recording.close()
+  }
+
+  test("a checkpoint log commit through FileContext starts no process") {
+    assert(processStartsInLogCommit(stock = false) == Nil)
+    // not vacuous: the stock classes fork readlink for the rename's link checks
+    assert(processStartsInLogCommit(stock = true).exists(_.startsWith("readlink")))
   }
 
   test("file: resolves to the no-fork classes under a default Configuration and in the session") {

@@ -4,12 +4,14 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, AQEShuffleReadExec}
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
@@ -148,6 +150,48 @@ class SpotifyPipelineSpec extends AnyFunSuite {
       .select("song_id", "rank", "rank_change").collect()
       .map(r => (r.getString(0), r.getInt(1), Option(r.get(2)))).toSeq
     assert(q4 == Seq(("a", 2, None), ("a", 3, Some(1))))
+  }
+
+  test("Q4 runs as one scan stage and one single-partition stage, with the same rows as before") {
+    val dir = SpotifyFixture.tempDir("graft-q4")
+    val days = Seq("2025-08-01", "2025-08-02", "2025-08-03", "2025-08-04", "2025-08-05")
+    // the 5-day fixture with song ids that recur: each day charts s0..s49
+    // once, every song 3 places lower than the day before (mod 50)
+    Flatten.songs(RawJsonReader.read(spark, SpotifyFixture.write(dir, days)))
+      .withColumn("song_id", concat(lit("s"), pmod(col("rank") + dayofmonth(col("scrape_date")) * 3, lit(50))))
+      .write.partitionBy("scrape_date").parquet(dir.resolve("songs").toString)
+    val songs = spark.read.parquet(dir.resolve("songs").toString)
+
+    /** Q4 planned the default way, with the window's own exchange and a
+      * range-partitioned sort: the rows the single-partition body must match. */
+    def windowedQ4(songId: Column): DataFrame = {
+      val w = Window.partitionBy(col("song_id")).orderBy(col("scrape_date"))
+      songs.filter(col("song_id") === songId)
+        .select(col("song_id"), col("song_name"), col("rank"), col("scrape_date"))
+        .withColumn("rank_change", col("rank") - lag(col("rank"), 1).over(w))
+        .orderBy("scrape_date")
+    }
+    val q4 = SpotifyQueries.q4ChartMovement(songs, "s17")
+    val group = "graft-q4-jobs"
+    spark.sparkContext.setJobGroup(group, "q4")
+    val rows = try q4.collect().toSeq finally spark.sparkContext.clearJobGroup()
+    assert(rows == windowedQ4(lit("s17")).collect().toSeq)
+    assert(rows.map(_.getAs[Int]("rank")) == Seq(14, 11, 8, 5, 2))
+    assert(rows.map(r => Option(r.getAs[Any]("rank_change"))) == None +: Seq.fill(4)(Some(-3)))
+    assert(SpotifyQueries.q4ChartMovement(songs, SpotifyQueries.mostCharted(songs)).collect().toSeq ==
+      windowedQ4(SpotifyQueries.mostCharted(songs)).collect().toSeq)
+
+    // one shuffle, into a single partition, which the window and the sort
+    // share: no range partitioning, so no sampling job
+    val helper = new AdaptiveSparkPlanHelper {}
+    val plan = q4.queryExecution.executedPlan
+    val shuffles = helper.collect(plan) { case s: ShuffleExchangeExec => s }
+    assert(shuffles.size == 1, plan.toString)
+    assert(shuffles.head.outputPartitioning.numPartitions == 1, plan.toString)
+    assert(!shuffles.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]), plan.toString)
+    // the status tracker is fed by the listener bus, asynchronously
+    eventually(timeout(30.seconds))(
+      assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).length == 2))
   }
 
   test("SQL twins match the DataFrame programs (Q2)") {
