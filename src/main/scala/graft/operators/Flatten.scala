@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Transform layer: nested raw items → the three flat tables
@@ -10,11 +9,10 @@ import org.apache.spark.sql.functions._
   * Input contract: the DataFrame from RawJsonReader.read —
   * (src_file, scrape_date, ord, added_at, track).
   *
-  * All three transforms are narrow projections except the dedup/rank
-  * windows, which shuffle once on their partition key. At 100 TB the
-  * window keys (album_id / artist_id / scrape_date) are the natural
-  * partitioning; a skewed chart date only ever holds one day's top-50
-  * per source, so no salting is needed.
+  * All three transforms are narrow projections except the album and
+  * artist dedups, which shuffle once on their key. At 100 TB those keys
+  * (album_id / artist_id) are the natural partitioning. `songs` is a
+  * projection alone, so it runs unchanged on a stream.
   */
 object Flatten {
 
@@ -52,17 +50,18 @@ object Flatten {
   }
 
   /** songs(song_id, song_name, duration_ms, url, popularity, song_added,
-    * album_id, artist_id, rank, scrape_date) — P2/P3 projection, D4 cast,
+    * album_id, artist_id, scrape_date, rank) — P2/P3 projection, D4 cast,
     * W1 rank generation. NOT deduped: a song legitimately reappears across
     * daily scrapes (reference :138-163; SURVEY §1.2).
     *
     * `rank` is the 1-based position in the day's chart — the column the
     * warehouse declares and queries but the in-repo transform never
-    * produced (SURVEY §1.4.1). */
-  def songs(raw: DataFrame): DataFrame = {
-    // One raw file per day is the contract; src_file tiebreak keeps rank
-    // deterministic even if a day was scraped twice.
-    val w = Window.partitionBy(col("scrape_date")).orderBy(col("src_file"), col("ord"))
+    * produced (SURVEY §1.4.1). The contract is one raw file per day, so
+    * the chart position is the item's position in its file, `ord + 1`: a
+    * per-row projection, the same in a batch and in a stream's
+    * micro-batch. A day scraped twice (two raw files with one date)
+    * therefore keeps both charts, each ranked 1..n in its own file. */
+  def songs(raw: DataFrame): DataFrame =
     raw.select(
       col("track.id").as("song_id"), // P2
       col("track.name").as("song_name"),
@@ -72,8 +71,6 @@ object Flatten {
       Casts.isoTimestamp(col("added_at")).as("song_added"), // D4
       col("track.album.id").as("album_id"),
       element_at(col("track.album.artists"), 1).getField("id").as("artist_id"), // P3
-      col("scrape_date"), col("ord"), col("src_file"))
-      .withColumn("rank", row_number().over(w)) // W1
-      .drop("ord", "src_file")
-  }
+      col("scrape_date"),
+      (col("ord") + 1).as("rank")) // W1
 }

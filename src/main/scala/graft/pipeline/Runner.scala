@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Flatten
@@ -13,16 +13,15 @@ import graft.sources.{Archiver, RawJsonReader, Sinks}
   * processes, shipping every intermediate through XCom rows in Postgres.
   * Here it is one driver program: parse once, persist, derive the three
   * tables (DAG fan-out), write, archive (fan-in). The only process
-  * boundaries left are the dedup/rank shuffles inside the transforms.
+  * boundaries left are the album and artist dedup shuffles.
   *
-  * The songs input is hash-partitioned by `scrape_date` into
-  * `defaultParallelism` partitions. That exchange satisfies the rank
-  * window's `partitionBy(scrape_date)`, so it replaces the window's own
-  * shuffle, and its explicit count keeps AQE from coalescing a small day
-  * set into one task. Each date still lands in one task (one file per
-  * `scrape_date=` dir), while the per-file write and commit work spreads
-  * over every core. Counts are observed on the parquet writes themselves,
-  * so no job re-runs a dedup or rank just to count.
+  * The songs table is a per-row projection of the parsed input
+  * (`Flatten.songs`), so its write has no shuffle. Each raw file is one
+  * wholetext row, parsed in one task, so each date lands in one task
+  * and one file per `scrape_date=` dir; the raw scan packs the files into
+  * about `defaultParallelism` partitions, so the per-file write and
+  * commit work spreads over every core. Counts are observed on the
+  * parquet writes themselves, so no job re-runs a dedup just to count.
   */
 object Runner {
 
@@ -43,12 +42,10 @@ object Runner {
       rows.get("n").asInstanceOf[Long]
     }
     val (nAlbum, nArtist, nSongs) =
-      try {
-        val byDate = raw.repartition(spark.sparkContext.defaultParallelism, col("scrape_date"))
-        (write(Flatten.albums(raw), "album", Nil),
-          write(Flatten.artists(raw), "artist", Nil),
-          write(Flatten.songs(byDate), "songs", Seq("scrape_date")))
-      } finally raw.unpersist()
+      try (write(Flatten.albums(raw), "album", Nil),
+        write(Flatten.artists(raw), "artist", Nil),
+        write(Flatten.songs(raw), "songs", Seq("scrape_date")))
+      finally raw.unpersist()
 
     // fan-in barrier: archive only after every branch wrote (T3)
     val archived = processedDir.map(Archiver.archive(spark, landingDir, _)).getOrElse(0)

@@ -1,8 +1,14 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, FileTable}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftsql.exprColumn
+import org.apache.spark.sql.types.DateType
 
 /** The reference's analysis workload, Q0-Q4 (SURVEY §3.3), as DataFrame
   * programs over the flat tables. This is the one body of each query:
@@ -41,14 +47,48 @@ object SpotifyQueries {
 
   /** Q1: top-10 trending songs, last 7 days of data
     * (spotify-analysis.sql:92-97). CURRENT_DATE in the reference; anchored
-    * to max(scrape_date) here so results are reproducible. */
-  def q1Trending(songs: DataFrame): DataFrame = {
-    val anchor = songs.agg(max(col("scrape_date")).as("max_d"))
-    songs.crossJoin(broadcast(anchor))
-      .filter(col("scrape_date") >= date_sub(col("max_d"), 7))
+    * to max(scrape_date) here so results are reproducible.
+    *
+    * The anchor is [[latestDate]]. Over a songs table read from disk it is
+    * a literal, so the date filter prunes partitions: Q1 is one job that
+    * reads only the last 8 dates' files. Over any other input it is a
+    * scalar subquery, with the same rows. */
+  def q1Trending(songs: DataFrame): DataFrame =
+    songs.filter(col("scrape_date") >= date_sub(latestDate(songs), 7))
       .select("song_id", "song_name", "artist_id", "album_id", "rank", "scrape_date")
       .orderBy(asc("rank"), asc("scrape_date"), asc("song_id"))
       .limit(10)
+
+  /** `max(scrape_date)` of `songs`, as a Column.
+    *
+    * When `songs` is a bare scan of a file table partitioned by a date
+    * `scrape_date` (a V2 `FileTable`, or a V1 `HadoopFsRelation`) whose
+    * file index holds its listing in memory (a directory listing or a
+    * streaming sink's log), the anchor is a literal: the greatest date
+    * among the partitions that list at least one file. It is read from
+    * the index the DataFrame already holds, so it runs no job and does no
+    * I/O. It equals the aggregate because Spark's partitioned writers
+    * open a file only when a row of that partition arrives: a listed
+    * partition holds rows, and an empty `scrape_date=` directory lists
+    * none. An empty table gives a null anchor, as the aggregate does.
+    *
+    * Any other input (a derived chart, a filtered read) gets the scalar
+    * subquery `max(scrape_date)`, the form [[mostCharted]] uses. */
+  def latestDate(songs: DataFrame): Column = {
+    val index = songs.queryExecution.analyzed match {
+      case r: LogicalRelation => Some(r.relation).collect { case h: HadoopFsRelation => h.location }
+      case r: DataSourceV2Relation => Some(r.table).collect { case t: FileTable => t.fileIndex }
+      case _ => None
+    }
+    val literal = index.collect { case i: PartitioningAwareFileIndex => i }.flatMap { i =>
+      val k = i.partitionSchema.fieldNames.indexOf("scrape_date")
+      Option.when(k >= 0 && i.partitionSchema(k).dataType == DateType) {
+        val days = i.listFiles(Nil, Nil).filter(_.files.nonEmpty).map(_.values)
+          .filterNot(_.isNullAt(k)).map(_.getInt(k))
+        exprColumn(Literal(days.maxOption.map(Int.box).orNull, DateType))
+      }
+    }
+    literal.getOrElse(songs.agg(max(col("scrape_date"))).scalar())
   }
 
   /** Q2: album popularity over time — join + group-avg + multi-column sort

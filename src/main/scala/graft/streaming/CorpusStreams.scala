@@ -15,8 +15,7 @@ import graft.operators.{Anomaly, Decay, NearDup, Sketches}
   * join on a derived key), and per-batch semantics are exactly what
   * ingest wants — every arriving snapshot is verdicted against the
   * index as of its arrival. This is the standard Structured Streaming
-  * composition pattern for reusing a batch operator (same shape as
-  * StreamingLoader.loadSongs).
+  * composition pattern for reusing a batch operator.
   *
   * Every STATEFUL ingest here shares one protocol, factored into
   * [[VersionedState]]: state version `v=N` is recomputed from `v=N−1`

@@ -10,7 +10,7 @@ import graft.sources.RawJsonReader
 /** Incremental ingest (SURVEY §2.1 S7/S10, §2.10 T2-T5).
   *
   * Replaces the reference's three mechanisms with one checkpointed
-  * Structured Streaming file source:
+  * Structured Streaming file source and Spark's parquet file sink:
   *  - S3KeySensor polling (orchestrate-lambda-Glue.py:35-43) → the file
   *    source discovers new files itself;
   *  - Snowpipe AUTO_INGEST pipes ×3 (spotify-analysis.sql:58-74) → one
@@ -21,6 +21,23 @@ import graft.sources.RawJsonReader
   *
   * `Trigger.AvailableNow` = the daily batch cadence (T1): drain everything
   * available, then stop — restartable, incremental, no sensor.
+  *
+  * The sink is exactly-once per batch id. It writes a batch's files, then
+  * commits their names to `<outDir>/_spark_metadata/<batchId>`; a batch
+  * id the log already holds is skipped. So a query that dies after the
+  * sink's commit and before the checkpoint's commit log re-runs the batch
+  * on restart without writing a row twice. Readers of `outDir`
+  * (`spark.read.parquet(outDir)`) list the table from that log
+  * (`MetadataLogFileIndex`), not from the directory, so files of a batch
+  * that failed before its commit are never read.
+  *
+  * Two consequences for callers:
+  *  - the stream owns `outDir`: any other writer's files there are
+  *    invisible to readers, because the log does not name them;
+  *  - the log stores absolute paths, so `spark.read.parquet(newDir)` of a
+  *    table moved to `newDir` still looks for the files at their old
+  *    paths. Read a moved table by glob, which lists the directory:
+  *    `spark.read.option("basePath", newDir).parquet(s"$newDir/scrape_date=*")`.
   *
   * Every query starts from `graftsql.sharedLoaderSession(spark)`, not from
   * `spark`: the codegen cache (`CodeGenerator.cache`) is keyed by class
@@ -46,18 +63,16 @@ object StreamingLoader {
       .option("pathGlobFilter", "*.json")
       .load(landingDir))
 
-  /** Start one incremental load: landing dir → parquet table dir. The
-    * songs transform runs per micro-batch via foreachBatch because the
-    * rank window needs the whole day's file — which is exactly one
-    * micro-batch element under file-granularity triggers. */
+  /** Start one incremental load: landing dir → songs parquet table at
+    * `outDir`, partitioned by `scrape_date`. `Flatten.songs` is a per-row
+    * projection, so a micro-batch is one job: read, flatten and write,
+    * with no shuffle. */
   def loadSongs(spark: SparkSession, landingDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    readRawStream(sharedLoaderSession(spark), landingDir).writeStream
-      .trigger(Trigger.AvailableNow())
+    Flatten.songs(readRawStream(sharedLoaderSession(spark), landingDir)).writeStream
+      .format("parquet")
+      .partitionBy("scrape_date")
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Flatten.songs(batch).write.mode("append")
-          .partitionBy("scrape_date").parquet(outDir)
-      }
-      .start()
+      .trigger(Trigger.AvailableNow())
+      .start(outDir)
 }

@@ -4,15 +4,19 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, AQEShuffleReadExec}
-import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Literal, ScalarSubquery}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.{FilePartition, InsertIntoHadoopFsRelationCommand}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftsql.columnExpr
+import org.apache.spark.sql.types.DateType
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
@@ -194,6 +198,75 @@ class SpotifyPipelineSpec extends AnyFunSuite {
       assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).length == 2))
   }
 
+  /** 12 days of 20 songs, written partitioned by date, plus an empty
+    * `scrape_date=` dir newer than every written date. */
+  private lazy val twelveDays = {
+    val dir = SpotifyFixture.tempDir("graft-q1")
+    val days = (1 to 12).map(d => f"2025-09-$d%02d")
+    val table = dir.resolve("songs")
+    Flatten.songs(RawJsonReader.read(spark, SpotifyFixture.write(dir, days, n = 20)))
+      .write.partitionBy("scrape_date").parquet(table.toString)
+    java.nio.file.Files.createDirectories(table.resolve("scrape_date=2025-12-31"))
+    table.toString
+  }
+
+  /** Q1 with its anchor cross-joined by broadcast: the rows the anchored
+    * body must match. */
+  private def crossJoinQ1(songs: DataFrame): Seq[Row] =
+    songs.crossJoin(broadcast(songs.agg(max(col("scrape_date")).as("max_d"))))
+      .filter(col("scrape_date") >= date_sub(col("max_d"), 7))
+      .select("song_id", "song_name", "artist_id", "album_id", "rank", "scrape_date")
+      .orderBy(asc("rank"), asc("scrape_date"), asc("song_id"))
+      .limit(10).collect().toSeq
+
+  private def hasSubquery(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalarSubquery])))
+
+  test("Q1 over a table read from disk: a literal anchor, one job, the last 8 dates' files") {
+    val useV1 = "spark.sql.sources.useV1SourceList"
+    val v1Sources = spark.conf.get(useV1)
+    val helper = new AdaptiveSparkPlanHelper {}
+    // the V1 read path (the test session's default), then the V2 one
+    Seq(v1Sources, "").foreach { sources =>
+      spark.conf.set(useV1, sources)
+      val songs = try spark.read.parquet(twelveDays) finally spark.conf.set(useV1, v1Sources)
+      // the empty 2025-12-31 dir holds no file, so it does not move the anchor
+      assert(columnExpr(SpotifyQueries.latestDate(songs)) ==
+        Literal(java.time.LocalDate.parse("2025-09-12").toEpochDay.toInt, DateType))
+
+      val q1 = SpotifyQueries.q1Trending(songs)
+      assert(!hasSubquery(q1))
+      val group = s"graft-q1-jobs-$sources"
+      spark.sparkContext.setJobGroup(group, "q1")
+      val rows = try q1.collect().toSeq finally spark.sparkContext.clearJobGroup()
+      assert(rows == crossJoinQ1(songs))
+      // rank 1 of each of the last 8 dates, then rank 2 of the two oldest
+      assert(rows.map(r => r.getAs[Int]("rank") -> r.getAs[java.sql.Date]("scrape_date").toString) ==
+        (5 to 12).map(d => 1 -> f"2025-09-$d%02d") ++ Seq(2 -> "2025-09-05", 2 -> "2025-09-06"))
+
+      val files = helper.collect(q1.queryExecution.executedPlan) {
+        case f: FileSourceScanExec => f.metrics("numFiles").value
+        case b: BatchScanExec => b.inputPartitions.collect { case p: FilePartition => p.files.length }.sum.toLong
+      }
+      assert(files.sum == 8L, q1.queryExecution.executedPlan.toString)
+      // the status tracker is fed by the listener bus, asynchronously
+      eventually(timeout(30.seconds))(
+        assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).length == 1))
+    }
+  }
+
+  test("Q1 over an in-memory input: a scalar-subquery anchor, with the cross-join body's rows") {
+    val read = spark.read.parquet(twelveDays)
+    val inMemory = spark.createDataFrame(
+      spark.sparkContext.parallelize(read.collect().toSeq), read.schema)
+    Seq(inMemory, read.filter(col("rank") > 3)).foreach { songs =>
+      val q1 = SpotifyQueries.q1Trending(songs)
+      assert(hasSubquery(q1))
+      val rows = q1.collect().toSeq
+      assert(rows.nonEmpty && rows == crossJoinQ1(songs))
+    }
+  }
+
   test("SQL twins match the DataFrame programs (Q2)") {
     val album = Flatten.albums(raw)
     val songs = Flatten.songs(raw)
@@ -279,21 +352,10 @@ class SpotifyPipelineSpec extends AnyFunSuite {
     assert(ranks.length == days.size)
     ranks.foreach(r => assert(r.getSeq[Int](1) == (1 to 50)))
 
-    // the songs write has one shuffle: the explicit date repartition, which
-    // the rank window reuses and AQE leaves at defaultParallelism partitions
-    val helper = new AdaptiveSparkPlanHelper {}
+    // the songs write is a projection of the parsed input: no shuffle exchange
     val plan = songsWrite.executedPlan
-    val shuffles = helper.collect(plan) { case s: ShuffleExchangeExec => s }
-    assert(shuffles.size == 1, plan.toString)
-    val dp = spark.sparkContext.defaultParallelism
-    assert(shuffles.head.shuffleOrigin == REPARTITION_BY_NUM)
-    shuffles.head.outputPartitioning match {
-      case h: HashPartitioning =>
-        assert(h.numPartitions == dp)
-        assert(h.expressions.map(_.sql) == Seq("scrape_date"))
-      case p => fail(s"unexpected partitioning $p")
-    }
-    assert(helper.collect(plan) { case r: AQEShuffleReadExec => r }.forall(!_.hasCoalescedPartition))
+    assert(new AdaptiveSparkPlanHelper {}.collect(plan) { case s: ShuffleExchangeExec => s }
+      .isEmpty, plan.toString)
   }
 
   test("runner: an empty landing dir yields an all-zero result") {

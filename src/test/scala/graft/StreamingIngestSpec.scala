@@ -1,9 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.pipeline.Runner
 import graft.streaming.StreamingLoader
 
 class StreamingIngestSpec extends AnyFunSuite {
@@ -71,5 +74,58 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(rows == 150)
     assert(spark.read.parquet(out).groupBy("scrape_date").count()
       .collect().forall(_.getLong(1) == 50))
+  }
+
+  test("a batch the sink committed is not written again when the checkpoint lost its commit") {
+    val dir = SpotifyFixture.tempDir("graft-stream-gap")
+    val landing = SpotifyFixture.write(dir, Seq("2025-07-01"))
+    val out = dir.resolve("songs").toString
+    val ckpt = dir.resolve("ckpt")
+    StreamingLoader.loadSongs(spark, landing, out, ckpt.toString).awaitTermination()
+    assert(spark.read.parquet(out).count() == 50)
+
+    // the process died after the sink committed batch 0 and before the
+    // checkpoint's commit log did: the restart runs batch 0 again
+    val commits = ckpt.resolve("commits")
+    Seq("0", ".0.crc").foreach(f => Files.delete(commits.resolve(f)))
+    StreamingLoader.loadSongs(spark, landing, out, ckpt.toString).awaitTermination()
+    assert(Files.exists(commits.resolve("0")))
+    assert(spark.read.parquet(out).count() == 50)
+    assert(SpotifyFixture.dataFilesUnder(dir.resolve("songs")).size == 1)
+  }
+
+  test("a day scraped twice: batch and stream write the same rows, ranked 1..50 within each file") {
+    val dir = SpotifyFixture.tempDir("graft-stream-twice")
+    val landing = SpotifyFixture.write(dir, Seq("2025-07-01"))
+    Files.writeString(Paths.get(landing, "spotify_raw_20250701180000.json"),
+      SpotifyFixture.itemsJson("2025-07-01", 50))
+    val batch = dir.resolve("batch").toString
+    val stream = dir.resolve("stream").toString
+    assert(Runner.runBatch(spark, landing, batch).songs == 100)
+    StreamingLoader.loadSongs(spark, landing, stream, dir.resolve("ckpt").toString)
+      .awaitTermination()
+
+    def rows(table: String) = {
+      val df = spark.read.parquet(table)
+      df.columns.toSeq -> df.collect().map(_.toString).sorted.toSeq
+    }
+    assert(rows(s"$batch/songs") == rows(stream))
+    // both files keep their own chart: every rank 1..50 twice, one date
+    val ranks = spark.read.parquet(stream).groupBy("scrape_date", "rank").count().collect()
+    assert(ranks.map(_.getAs[Int]("rank")).sorted.toSeq == (1 to 50))
+    assert(ranks.forall(r => r.getAs[Long]("count") == 2L &&
+      r.getAs[java.sql.Date]("scrape_date").toString == "2025-07-01"))
+  }
+
+  test("a streamed table moved to another dir reads back by glob") {
+    val dir = SpotifyFixture.tempDir("graft-stream-moved")
+    val landing = SpotifyFixture.write(dir, Seq("2025-07-01", "2025-07-02"))
+    StreamingLoader.loadSongs(spark, landing, dir.resolve("songs").toString,
+      dir.resolve("ckpt").toString).awaitTermination()
+    val moved = dir.resolve("kept")
+    Files.move(dir.resolve("songs"), moved)
+    val songs = spark.read.option("basePath", moved.toString).parquet(s"$moved/scrape_date=*")
+    assert(songs.count() == 100)
+    assert(songs.select("scrape_date").distinct().count() == 2)
   }
 }
