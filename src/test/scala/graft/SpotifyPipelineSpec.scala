@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{Literal, ScalarSubquery}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
@@ -375,5 +376,100 @@ class SpotifyPipelineSpec extends AnyFunSuite {
     assert(!parsedInputCached)
     intercept[Exception](Runner.runBatch(spark, l, out))
     assert(!parsedInputCached)
+  }
+
+  test("runner: one failed write lets the others finish, rethrows its own exception, skips the archive") {
+    val dir = SpotifyFixture.tempDir("graft-run-fail-one")
+    val l = SpotifyFixture.write(dir, Seq("2025-07-05"))
+    val out = dir.resolve("out")
+    java.nio.file.Files.createDirectories(out)
+    java.nio.file.Files.createFile(out.resolve("artist")) // the artist parquet write fails
+    val failed = new ConcurrentLinkedQueue[(QueryExecution, Exception)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit = ()
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = failed.add(qe -> e)
+    }
+    def parsedInputCached = spark.sharedState.cacheManager.lookupCachedData(
+      RawJsonReader.read(spark, l).asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+    def writeThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith(Runner.WriteThreadPrefix))
+    spark.listenerManager.register(listener)
+    val thrown =
+      try intercept[Exception](Runner.runBatch(spark, l, out.toString,
+        Some(dir.resolve("processed").toString), alsoCsv = true))
+      finally spark.listenerManager.unregister(listener)
+
+    assert(writeThreads.isEmpty, writeThreads)
+    assert(!parsedInputCached)
+    // the write's own exception: the one Spark reported for the artist parquet write
+    val (qe, e) = eventually(timeout(30.seconds))(failed.asScala.toSeq match { case Seq(f) => f })
+    assert(qe.analyzed match {
+      case c: InsertIntoHadoopFsRelationCommand => c.outputPath.getName == "artist"
+      case _ => false
+    }, qe.analyzed)
+    assert(thrown eq e, thrown)
+    // the other writes ran to the end; the landing file was not archived
+    assert(spark.read.parquet(out.resolve("album").toString).count() == 10)
+    assert(spark.read.parquet(out.resolve("songs").toString).count() == 50)
+    assert(spark.read.option("header", "true").csv(out.resolve("csv/artist").toString).count() == 7)
+    assert(new java.io.File(l).listFiles().count(_.getName.endsWith(".json")) == 1)
+  }
+
+  test("runner: with two failed writes, the first submitted is thrown and the other suppressed on it") {
+    val dir = SpotifyFixture.tempDir("graft-run-fail-two")
+    val l = SpotifyFixture.write(dir, Seq("2025-07-06"))
+    val out = dir.resolve("out")
+    java.nio.file.Files.createDirectories(out)
+    Seq("album", "songs").foreach(t => java.nio.file.Files.createFile(out.resolve(t)))
+    val thrown = intercept[Exception](Runner.runBatch(spark, l, out.toString))
+    def names(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(names(thrown).contains(out.resolve("album").toString), names(thrown))
+    val songsFailure = thrown.getSuppressed.filter(names(_).contains(out.resolve("songs").toString))
+    assert(songsFailure.length == 1, thrown.getSuppressed.map(names).mkString("\n"))
+    assert(spark.read.parquet(out.resolve("artist").toString).count() == 7)
+  }
+
+  test("runner: the writes of a pass overlap, and every job carries the caller's group and description") {
+    val dir = SpotifyFixture.tempDir("graft-run-concurrent")
+    val l = SpotifyFixture.write(dir,
+      Seq("2025-09-01", "2025-09-02", "2025-09-03", "2025-09-04", "2025-09-05"))
+    val sc = spark.sparkContext
+    val starts = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.put(e.jobId, e.time)
+    }
+    def group(e: SparkListenerJobStart) = e.properties.getProperty("spark.jobGroup.id")
+    sc.addSparkListener(listener)
+    val res =
+      try {
+        sc.setJobGroup("backfill-pass", "one backfill pass")
+        val res = try Runner.runBatch(spark, l, dir.resolve("out").toString, alsoCsv = true)
+          finally sc.clearJobGroup()
+        // a marker job queued behind every event of the pass
+        sc.setJobGroup("marker", "marker")
+        try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
+        eventually(timeout(30.seconds)) {
+          assert(starts.asScala.filter(group(_) == "marker").forall(s => ends.containsKey(s.jobId)))
+          assert(starts.asScala.exists(group(_) == "marker"))
+        }
+        res
+      } finally sc.removeSparkListener(listener)
+    assert(res == Runner.Result(10, 7, 250, 0))
+
+    val pass = starts.asScala.toSeq.filter(group(_) != "marker")
+    assert(pass.size >= 6, pass.size) // at least one job per write
+    pass.foreach { s =>
+      assert(group(s) == "backfill-pass", s.properties)
+      assert(s.properties.getProperty("spark.job.description") == "one backfill pass",
+        s.properties)
+    }
+    val spans = pass.map(s => (s.time, ends.get(s.jobId)))
+    val overlapping = spans.combinations(2).count { case Seq((s1, e1), (s2, e2)) =>
+      s1 < e2 && s2 < e1
+    }
+    assert(overlapping >= 1, spans)
   }
 }
