@@ -17,7 +17,8 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * Usage: `sbt "runMain graft.Profile <q1,q2,...> [reps] [--jobs|--alloc|--explain]"`
   * with Bench's env knobs. Each comma-separated entry selects the
   * registered queries whose names start with it ("q94" or
-  * "q94_token_pagerank"; "q" selects the whole suite). reps defaults
+  * "q94_token_pagerank"; "q" selects the whole suite), and an entry
+  * that selects nothing is an error (SparkEntry.select). reps defaults
   * to 3; query-local cached state is swept after every rep, as in Bench.
   *  - no flag: time every rep (`[qbench] <query> rep <i>: <s> s`).
   *  - `--jobs`: every Spark JOB of each query's last rep — duration,
@@ -51,10 +52,7 @@ object Profile {
     val modes = Set("--jobs", "--alloc", "--explain")
     require(rest.nonEmpty && flags.size <= 1 && flags.forall(modes),
       "usage: Profile <q1,q2,...> [reps] [--jobs|--alloc|--explain]")
-    val prefixes = rest.head.split(',').map(_.trim).filter(_.nonEmpty)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => prefixes.exists(n.startsWith))
-    require(names.nonEmpty, s"no registered query starts with any of ${rest.head}")
+    val names = SparkEntry.select(rest.head.split(',').toSeq).map(_.name)
     val reps = rest.lift(1).fold(3)(_.toInt)
     require(reps >= 1, s"reps must be at least 1, got $reps")
 

@@ -29,6 +29,10 @@ package graft
   * slope_out, the per-decade growth of time per output row), so
   * "output-bound" is a computed verdict. Disable with
   * SPARK_GRAFT_SWEEP_SF1=0, or pass a comma list to override the set.
+  *
+  * Query arguments and the SPARK_GRAFT_SWEEP_SF1 list select queries by
+  * name prefix (SparkEntry.select); one that selects nothing fails the
+  * run before any query runs.
   */
 object ScaleSweep {
   def main(args: Array[String]): Unit = {
@@ -130,7 +134,56 @@ object ScaleSweep {
       // key at every SF — the slope proves the hot key's growth stays
       // linear through the broadcast join + partial agg)
       "q224_nested_drift", "q225_drop_drift", "q226_skewed_bigdim")
-    val names = if (args.nonEmpty) args.toSeq else defaults
+    val names = if (args.nonEmpty) SparkEntry.select(args.toSeq).map(_.name) else defaults
+    // THE SF1 RUNG (round 12, VERDICT r11 item 5): a 1000× spread
+    // separates output growth from compute growth where 100× can't.
+    // The top-slope rows also run at a 10×-replicated sf0.1 corpus
+    // (Tables.stageScaled — structure-preserving replication, staged
+    // once under target/, memoized on disk), and their slope is
+    // NORMALIZED BY OUTPUT ROWS: slope_tpo = slope_t − slope_out is
+    // the per-decade growth of time PER OUTPUT ROW, so "output-bound"
+    // becomes a computed verdict instead of a scaladoc claim. The flag
+    // for this rung is superlinear-in-time-per-output:
+    // slope_t > 1.3 AND slope_tpo > 0.3.
+    val sf1Defaults = Seq(
+      "q01_pricing_summary", "q07_dedup_keepfirst", "q21_join_agg_time",
+      "q30_minhash_lsh", "q32_simhash_pairs", "q33_embed_neardup",
+      "q42_sessionize", "q55_salted_join", "q66_rank_topk", "q68_scd2",
+      "q80_quantile_sketch", "q177_rolling_range", "q178_nest_export",
+      "q184_json_props", "q202_cube_aggs", "q222_bigdim_join",
+      // round-13 (VERDICT r12 item 2): the iterative-graph family —
+      // rounds×joins behavior is exactly what 100× scale stresses
+      // (per-round exchange growth, lineage-cut cost, fixed job floors
+      // amortizing over growing edge volume), so each fixed-point /
+      // peeling operator gets its own sf1 row with an output-normalized
+      // verdict instead of a scaladoc claim
+      "q94_token_pagerank", "q145_token_hits", "q162_kcore",
+      "q218_ktruss", "q130_kcenter_coreset", "q131_knn_communities",
+      // round-14 (VERDICT r13 item 6): the recall-gated ANN rows —
+      // recall is DENSITY-dependent (bucket occupancy and probe
+      // coverage change with corpus size), so the 0.01→0.1 verdict
+      // doesn't transfer to 10×; each row re-runs its built-in
+      // recall@5 gate at sf1 and the verdict lands in the artifact
+      "q35_ann_ivf_topk", "q49_ann_lsh_topk", "q169_ann_multiprobe",
+      // round-14: the prefix-sum admission rows (q69 = the bare device,
+      // q82 = the device at the end of the curation chain) — the
+      // two-phase rewrite's claim is exactly a scale claim, so it gets
+      // a 1000×-spread row instead of a scaladoc argument (q191 rides
+      // the same device over q82's BPE-joined stream; rung kept lean)
+      "q69_token_budget", "q82_curate",
+      // round-13: the skewed hot-key join at 1000× spread — the planted
+      // hot key carries 3/4 of the fact at every SF, so a linear slope
+      // here is the hot-key story holding at scale
+      "q226_skewed_bigdim")
+    val sf1Conf = sys.env.getOrElse("SPARK_GRAFT_SWEEP_SF1", "")
+    val sf1Names: Seq[String] =
+      if (sf1Conf == "0") Nil
+      else if (sf1Conf.nonEmpty)
+        SparkEntry.select(sf1Conf.split(',').toSeq).map(_.name)
+      // under an explicit CLI query list, the rung follows the list (an
+      // iteration run shouldn't pay the default 16-row sf1 pass)
+      else if (args.nonEmpty) sf1Defaults.filter(names.contains)
+      else sf1Defaults
     val spark = Session.build()
 
     // Query-local cached state is swept between runs, but the
@@ -179,55 +232,6 @@ object ScaleSweep {
         (if (anyFail) "  **FAILED**" else ""))
       (n, ts, slopes, anyFail)
     }
-    // THE SF1 RUNG (round 12, VERDICT r11 item 5): a 1000× spread
-    // separates output growth from compute growth where 100× can't.
-    // The top-slope rows also run at a 10×-replicated sf0.1 corpus
-    // (Tables.stageScaled — structure-preserving replication, staged
-    // once under target/, memoized on disk), and their slope is
-    // NORMALIZED BY OUTPUT ROWS: slope_tpo = slope_t − slope_out is
-    // the per-decade growth of time PER OUTPUT ROW, so "output-bound"
-    // becomes a computed verdict instead of a scaladoc claim. The flag
-    // for this rung is superlinear-in-time-per-output:
-    // slope_t > 1.3 AND slope_tpo > 0.3.
-    val sf1Defaults = Seq(
-      "q01_pricing_summary", "q07_dedup_keepfirst", "q21_join_agg_time",
-      "q30_minhash_lsh", "q32_simhash_pairs", "q33_embed_neardup",
-      "q42_sessionize", "q55_salted_join", "q66_rank_topk", "q68_scd2",
-      "q80_quantile_sketch", "q177_rolling_range", "q178_nest_export",
-      "q184_json_props", "q202_cube_aggs", "q222_bigdim_join",
-      // round-13 (VERDICT r12 item 2): the iterative-graph family —
-      // rounds×joins behavior is exactly what 100× scale stresses
-      // (per-round exchange growth, lineage-cut cost, fixed job floors
-      // amortizing over growing edge volume), so each fixed-point /
-      // peeling operator gets its own sf1 row with an output-normalized
-      // verdict instead of a scaladoc claim
-      "q94_token_pagerank", "q145_token_hits", "q162_kcore",
-      "q218_ktruss", "q130_kcenter_coreset", "q131_knn_communities",
-      // round-14 (VERDICT r13 item 6): the recall-gated ANN rows —
-      // recall is DENSITY-dependent (bucket occupancy and probe
-      // coverage change with corpus size), so the 0.01→0.1 verdict
-      // doesn't transfer to 10×; each row re-runs its built-in
-      // recall@5 gate at sf1 and the verdict lands in the artifact
-      "q35_ann_ivf_topk", "q49_ann_lsh_topk", "q169_ann_multiprobe",
-      // round-14: the prefix-sum admission rows (q69 = the bare device,
-      // q82 = the device at the end of the curation chain) — the
-      // two-phase rewrite's claim is exactly a scale claim, so it gets
-      // a 1000×-spread row instead of a scaladoc argument (q191 rides
-      // the same device over q82's BPE-joined stream; rung kept lean)
-      "q69_token_budget", "q82_curate",
-      // round-13: the skewed hot-key join at 1000× spread — the planted
-      // hot key carries 3/4 of the fact at every SF, so a linear slope
-      // here is the hot-key story holding at scale
-      "q226_skewed_bigdim")
-    val sf1Conf = sys.env.getOrElse("SPARK_GRAFT_SWEEP_SF1", "")
-    val sf1Names: Seq[String] =
-      if (sf1Conf == "0") Nil
-      else if (sf1Conf.nonEmpty)
-        sf1Conf.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-      // under an explicit CLI query list, the rung follows the list (an
-      // iteration run shouldn't pay the default 16-row sf1 pass)
-      else if (args.nonEmpty) sf1Defaults.filter(names.contains)
-      else sf1Defaults
     final case class Sf1Row(t: Double, outs: Seq[Long], slopeT: Double,
       slopeOut: Double, fail: Boolean,
       recall: Option[(Long, Long, Boolean)] = None)
@@ -351,7 +355,7 @@ object ScaleSweep {
     // provenance honesty (round-11 ADVICE): when the query list came
     // from explicit CLI args, absence means "not requested", not
     // "floor-bound" — the floor claim is only true for the default set
-    val excluded = SparkEntry.queries.keys.toSeq.sorted
+    val excluded = SparkEntry.registry.map(_.name)
       .filterNot(names.contains)
       .map(n => "\"" + n + "\":\"" + (
         if (args.nonEmpty) "not requested (explicit query list)"

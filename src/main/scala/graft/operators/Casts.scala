@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Casting/cleaning columns (SURVEY §2.3 D3/D4/D5).
+/** Casting/cleaning columns (SURVEY §2.3 D3/D4; D5's NULL tokens are
+  * read by Sinks.readCsv).
   *
   * Pure `Column` expressions — whole-stage-codegen'd, no UDFs.
   */
@@ -20,10 +21,4 @@ object Casts {
   /** ISO-8601 timestamp with zone → session-UTC TimestampType
     * (reference :158; TIMESTAMP_TZ per spotify-analysis.sql:47). */
   def isoTimestamp(c: Column): Column = to_timestamp(c)
-
-  /** Null normalization for CSV ingest: 'NULL'/'null'/'' → null
-    * (spotify-analysis.sql:18-19). Readers should prefer the CSV options
-    * (see Sinks.readCsv); this is the column-level equivalent. */
-  def normalizeNull(c: Column): Column =
-    when(c.isin("NULL", "null", ""), lit(null)).otherwise(c)
 }

@@ -1,6 +1,9 @@
 package graft.queries
 
-/** DuckDB oracle SQL for the corpus (training-data-pipeline) queries.
+import graft.QueryDef
+
+/** The corpus (training-data-pipeline) queries and the later star
+  * queries, each registered with its DuckDB oracle SQL.
   *
   * Every expression mirrors the Spark query's arithmetic exactly —
   * md5-derived integer hashes, sequential double folds, identical
@@ -392,37 +395,67 @@ object CorpusOracles {
   private def bpeTrainingCtes: String = bpeByteCtes(5,
     "SELECT unnest(string_split(text, ' ')) AS word FROM documents")
 
-  private val sqlBase: Map[String, String] = Map(
-    "q24_dedup_exact" ->
-      """SELECT md5(text) AS content_hash, count(*) AS n_dups, min(doc_id) AS keeper_id
-         FROM documents GROUP BY 1 ORDER BY 1""",
+  // X91: incremental cross-snapshot dedup — new snapshot (src10+)
+  // probed against the indexed corpus (src0–src9) on hashed shingles.
+  // The SAME oracle also gates q120, the X101 STREAMING face of the
+  // operator: per-doc verdicts depend only on (doc, index), never on
+  // which micro-batch carried the doc, so batch and foreachBatch
+  // compositions must produce identical tables.
+  private val incrementalNearDupSql: String =
+    s"""WITH $shingleCte,
+       shh AS (SELECT doc_id, ${md5h56("shingle")} & ${(1L << 55) - 1} AS h FROM sh),
+       sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+       srcn AS (SELECT doc_id, replace(source, 'src', '')::INT AS sn FROM documents),
+       bsh AS (SELECT shh.doc_id, h FROM shh JOIN srcn USING (doc_id) WHERE sn >= 10),
+       ish AS (SELECT shh.doc_id, h FROM shh JOIN srcn USING (doc_id) WHERE sn < 10),
+       m AS (SELECT b.doc_id AS batch_id, i.doc_id AS index_id, count(*) AS nc
+             FROM bsh b JOIN ish i ON b.h = i.h GROUP BY 1, 2),
+       mj AS (SELECT batch_id, index_id,
+                nc::DOUBLE/(sb.n + si.n - nc) AS jaccard
+              FROM m JOIN sz sb ON batch_id = sb.doc_id
+                     JOIN sz si ON index_id = si.doc_id
+              WHERE nc::DOUBLE/(sb.n + si.n - nc) >= 0.5),
+       v AS (SELECT batch_id AS doc_id, min(index_id) AS dup_of,
+               count(*) AS n_matches, max(jaccard) AS best_jaccard
+             FROM mj GROUP BY 1)
+       SELECT d.doc_id, v.dup_of IS NOT NULL AS is_dup, v.dup_of,
+              coalesce(v.n_matches, 0)::BIGINT AS n_matches, v.best_jaccard
+       FROM (SELECT doc_id FROM srcn WHERE sn >= 10) d
+       LEFT JOIN v USING (doc_id) ORDER BY d.doc_id"""
 
-    "q25_text_stats" ->
+  /** The corpus queries and the later star queries (q182 on), each with
+    * its oracle; [[graft.SparkEntry.registry]] lists them with the rest. */
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q24_dedup_exact", CorpusQueries.dedupExact(_, _),
+      """SELECT md5(text) AS content_hash, count(*) AS n_dups, min(doc_id) AS keeper_id
+         FROM documents GROUP BY 1 ORDER BY 1"""),
+
+    QueryDef("q25_text_stats", CorpusQueries.textStats(_, _),
       s"""SELECT doc_id,
           $tokenCount::BIGINT AS n_tokens,
           len(regexp_extract_all(text, '[a-z]+|[0-9]+'))::BIGINT AS n_words,
           length(regexp_replace(text, '[a-z0-9 ]', '', 'g'))::BIGINT AS n_punct,
           $meanTokLen AS mean_tok_len
-          FROM documents ORDER BY doc_id""",
+          FROM documents ORDER BY doc_id"""),
 
-    "q26_lang_id" -> langIdSql,
+    QueryDef("q26_lang_id", CorpusQueries.langId(_, _), langIdSql),
 
-    "q27_quality_score" ->
+    QueryDef("q27_quality_score", CorpusQueries.quality(_, _),
       s"""SELECT doc_id, $qualityExpr AS quality
-          FROM documents ORDER BY doc_id""",
+          FROM documents ORDER BY doc_id"""),
 
-    "q28_fingerprint" ->
+    QueryDef("q28_fingerprint", CorpusQueries.fingerprint(_, _),
       """SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-         FROM documents ORDER BY doc_id""",
+         FROM documents ORDER BY doc_id"""),
 
-    "q29_ngram_jaccard" -> jaccardPairs(0.5),
+    QueryDef("q29_ngram_jaccard", CorpusQueries.ngramJaccard(_, _), jaccardPairs(0.5)),
 
-    "q30_minhash_lsh" -> jaccardPairs(0.8),
+    QueryDef("q30_minhash_lsh", CorpusQueries.minhashLsh(_, _), jaccardPairs(0.8)),
 
     // X105: Broder'97 containment |A∩B|/|A| both directions + max —
     // the same exact all-pairs core as the Jaccard twin, different
     // post-arithmetic
-    "q121_containment" ->
+    QueryDef("q121_containment", CorpusQueries.containmentNearDup(_, _),
       s"""WITH ${shingleCteN(3)},
          shh AS (SELECT doc_id, ${md5h56("shingle")} & ${(1L << 55) - 1} AS h FROM sh),
          p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS nc
@@ -434,27 +467,27 @@ object CorpusOracles {
                 greatest(nc::DOUBLE / sa.n, nc::DOUBLE / sb.n) AS containment
          FROM p JOIN sz sa ON doc_a = sa.doc_id JOIN sz sb ON doc_b = sb.doc_id
          WHERE greatest(nc::DOUBLE / sa.n, nc::DOUBLE / sb.n) >= 0.6
-         ORDER BY doc_a, doc_b""",
+         ORDER BY doc_a, doc_b"""),
 
-    "q31_simhash" ->
-      s"WITH $simhashCte SELECT doc_id, simhash FROM fp ORDER BY doc_id",
+    QueryDef("q31_simhash", CorpusQueries.simhash(_, _),
+      s"WITH $simhashCte SELECT doc_id, simhash FROM fp ORDER BY doc_id"),
 
-    "q32_simhash_pairs" ->
+    QueryDef("q32_simhash_pairs", CorpusQueries.simhashPairs(_, _),
       s"""WITH $simhashCte
          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                 bit_count(xor(a.simhash, b.simhash))::BIGINT AS hamming
          FROM fp a JOIN fp b ON a.doc_id < b.doc_id
          WHERE bit_count(xor(a.simhash, b.simhash)) <= 8
-         ORDER BY doc_a, doc_b""",
+         ORDER BY doc_a, doc_b"""),
 
-    "q33_embed_neardup" ->
+    QueryDef("q33_embed_neardup", CorpusQueries.embedNearDup(_, _),
       s"""WITH c AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
             ${cosine("a.embedding", "b.embedding")} AS cos_sim
           FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
           SELECT vec_a, vec_b, cos_sim FROM c WHERE cos_sim >= 0.4
-          ORDER BY vec_a, vec_b""",
+          ORDER BY vec_a, vec_b"""),
 
-    "q34_ann_topk" ->
+    QueryDef("q34_ann_topk", CorpusQueries.annTopK(_, _),
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
           c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 10),
           s AS (SELECT query_id, vec_id, ${cosine("qv", "embedding")} AS sim FROM c, q),
@@ -462,37 +495,37 @@ object CorpusOracles {
                   row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rnk
                 FROM s)
           SELECT query_id, vec_id, rnk, sim FROM r WHERE rnk <= 5
-          ORDER BY query_id, rnk""",
+          ORDER BY query_id, rnk"""),
 
-    "q36_multimodal_meta" -> multimodalSql,
+    QueryDef("q36_multimodal_meta", CorpusQueries.multimodalMeta(_, _), multimodalSql),
 
-    "q37_multimodal_features" -> multimodalSql,
+    QueryDef("q37_multimodal_features", CorpusQueries.multimodalFeatures(_, _), multimodalSql),
 
-    "q38_rolling_fp" ->
+    QueryDef("q38_rolling_fp", CorpusQueries.rollingFingerprint(_, _),
       s"""SELECT doc_id,
           list_reduce(
             list_prepend(0::BIGINT,
               list_transform(string_split(text, ' '), t -> ${md5h56("t")})),
             (a, b) -> (a * 131 + b) & ${(1L << 47) - 1})::BIGINT AS rolling_fp
-          FROM documents ORDER BY doc_id""",
+          FROM documents ORDER BY doc_id"""),
 
-    "q39_token_freq" ->
+    QueryDef("q39_token_freq", CorpusQueries.tokenFreq(_, _),
       """SELECT token, count(*) AS n
          FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-         GROUP BY token ORDER BY n DESC, token LIMIT 100""",
+         GROUP BY token ORDER BY n DESC, token LIMIT 100"""),
 
     // (user_id, ts) pairs are unique in events, so ASOF's greatest-ts<=
     // match is unambiguous and equals the union+window implementation.
-    "q40_asof_join" ->
+    QueryDef("q40_asof_join", CorpusQueries.asofJoin(_, _),
       """WITH c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
          p AS (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase')
          SELECT c.event_id, c.user_id, c.ts,
                 p.ts AS last_purchase_ts, p.value AS last_purchase_value
          FROM c ASOF LEFT JOIN p
            ON c.user_id = p.user_id AND c.ts >= p.ts
-         ORDER BY c.event_id""",
+         ORDER BY c.event_id"""),
 
-    "q41_range_join" ->
+    QueryDef("q41_range_join", CorpusQueries.rangeJoin(_, _),
       """WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
          c AS (SELECT user_id, ts, value FROM events WHERE event_type = 'click'),
          j AS (SELECT p.event_id, count(*) AS n_clicks_1h, max(c.value) AS max_click_value
@@ -501,9 +534,9 @@ object CorpusOracles {
                GROUP BY 1)
          SELECT p.event_id, p.user_id, p.ts,
                 coalesce(j.n_clicks_1h, 0) AS n_clicks_1h, j.max_click_value
-         FROM p LEFT JOIN j USING (event_id) ORDER BY p.event_id""",
+         FROM p LEFT JOIN j USING (event_id) ORDER BY p.event_id"""),
 
-    "q42_sessionize" ->
+    QueryDef("q42_sessionize", CorpusQueries.sessionize(_, _),
       """WITH l AS (SELECT user_id, ts,
                 lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev
               FROM events),
@@ -515,14 +548,14 @@ object CorpusOracles {
               FROM l)
          SELECT user_id, session_seq, min(ts) AS session_start,
                 max(ts) AS session_end, count(*) AS n_events
-         FROM g GROUP BY 1, 2 ORDER BY user_id, session_start""",
+         FROM g GROUP BY 1, 2 ORDER BY user_id, session_start"""),
 
     // Approximate-operator gates: each query reduces its approximation to
     // a deterministic verdict the hash oracle can check — mean recall@k
     // over the query set vs a thresholded TRUE (q35/q49: thresholds carry
     // wide margin under the measured means, see CorpusQueries), and HLL
     // relative error vs the exact distinct (q44).
-    "q35_ann_ivf_topk" ->
+    QueryDef("q35_ann_ivf_topk", CorpusQueries.annIvfTopK(_, _),
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
                    FROM embeddings WHERE vec_id < 10),
           c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 10),
@@ -536,9 +569,9 @@ object CorpusOracles {
           SELECT CAST(count(DISTINCT query_id) AS BIGINT) AS n_queries,
                  CAST(5 AS BIGINT) AS k,
                  count(*) = count(DISTINCT query_id) * 5 AS recall_ok
-          FROM bf""",
+          FROM bf"""),
 
-    "q49_ann_lsh_topk" ->
+    QueryDef("q49_ann_lsh_topk", CorpusQueries.annLshTopK(_, _),
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
                    FROM embeddings WHERE vec_id < 10),
           c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 10),
@@ -552,14 +585,14 @@ object CorpusOracles {
           SELECT CAST(count(DISTINCT query_id) AS BIGINT) AS n_queries,
                  CAST(5 AS BIGINT) AS k,
                  count(*) = count(DISTINCT query_id) * 5 AS recall_ok
-          FROM bf""",
+          FROM bf"""),
 
     // X157: multi-probe LSH — same thresholded-recall verdict shape.
     // Like q35/q49, the twin derives the verdict THROUGH the
     // brute-force ranking (the work the engine's recall gate also
     // pays), so its wall-clock is an honest denominator — a constant
     // TRUE row made the recorded ratios meaningless (round-6 note)
-    "q169_ann_multiprobe" ->
+    QueryDef("q169_ann_multiprobe", CorpusQueries.annMultiProbeTopK(_, _),
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
                    FROM embeddings WHERE vec_id < 10),
           c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 10),
@@ -573,27 +606,27 @@ object CorpusOracles {
           SELECT CAST(count(DISTINCT query_id) AS BIGINT) AS n_queries,
                  CAST(5 AS BIGINT) AS k,
                  count(*) = count(DISTINCT query_id) * 5 AS recall_ok
-          FROM bf""",
+          FROM bf"""),
 
-    "q44_approx_distinct" ->
+    QueryDef("q44_approx_distinct", CorpusQueries.approxDistinct(_, _),
       """SELECT l_returnflag,
                 CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_distinct_l_suppkey,
                 TRUE AS approx_ok
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
+         FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
-    "q43_salted_collect" ->
+    QueryDef("q43_salted_collect", CorpusQueries.saltedCollect(_, _),
       """SELECT l_returnflag,
                 array_to_string(list_sort(list(DISTINCT l_suppkey)), ',') AS suppkeys
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
+         FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
-    "q50_dup_groups" ->
+    QueryDef("q50_dup_groups", CorpusQueries.dupGroups(_, _),
       s"""WITH RECURSIVE $dupGroupCtes
          SELECT node AS doc_id, min(reach) AS group_id
-         FROM r GROUP BY node ORDER BY doc_id""",
+         FROM r GROUP BY node ORDER BY doc_id"""),
 
     // X89: canonical keeper per near-dup cluster — keep the BEST doc
     // (quality argmax, doc_id tiebreak), not the arbitrary first
-    "q105_canonical_keeper" ->
+    QueryDef("q105_canonical_keeper", CorpusQueries.canonicalKeeper(_, _),
       s"""WITH RECURSIVE $dupGroupCtes,
          g AS (SELECT node AS doc_id, min(reach) AS group_id
                FROM r GROUP BY node),
@@ -605,12 +638,12 @@ object CorpusOracles {
                FROM g JOIN q USING (doc_id))
          SELECT group_id, doc_id AS keeper_id, quality,
                 CAST(group_size AS BIGINT) AS group_size
-         FROM j WHERE rn = 1 ORDER BY group_id""",
+         FROM j WHERE rn = 1 ORDER BY group_id"""),
 
     // X90: SemDeDup — deterministic seed centroids (8 lowest vec_ids),
     // nearest-centroid assignment (csim desc, centroid_id tiebreak),
     // within-cluster pairs at cosine >= 0.4, verdict per vector
-    "q106_semdedup" ->
+    QueryDef("q106_semdedup", CorpusQueries.semDedup(_, _),
       s"""WITH $semAssignCtes,
          pe AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
                   ${cosine("ea.embedding", "eb.embedding")} AS cos_sim
@@ -625,11 +658,11 @@ object CorpusOracles {
                 doms.dup_of IS NOT NULL AS is_dup, doms.dup_of,
                 coalesce(doms.n_dominators, 0)::BIGINT AS n_dominators
          FROM asg LEFT JOIN doms ON asg.vec_id = doms.vec_id
-         ORDER BY asg.vec_id""",
+         ORDER BY asg.vec_id"""),
 
     // X92: prototypicality pruning — cosine to the assigned centroid,
     // per-cluster rank (desc, vec_id tiebreak), integer keep rule
-    "q108_prototypicality" ->
+    QueryDef("q108_prototypicality", CorpusQueries.prototypicality(_, _),
       s"""WITH $semAssignCtes,
          r AS (SELECT vec_id, centroid_id, csim AS proto_score,
                  row_number() OVER (PARTITION BY centroid_id
@@ -640,11 +673,11 @@ object CorpusOracles {
                 CAST(proto_rank AS BIGINT) AS proto_rank,
                 CAST(n_cluster AS BIGINT) AS n_cluster,
                 proto_rank * 5 > n_cluster AS keep
-         FROM r ORDER BY vec_id""",
+         FROM r ORDER BY vec_id"""),
 
     // X93: source-overlap duplication matrix — q29 pairs rolled up to
     // unordered source pairs; count/min/max aggregates only
-    "q109_source_overlap" ->
+    QueryDef("q109_source_overlap", CorpusQueries.sourceOverlap(_, _),
       s"""WITH $shingleCte,
          shh AS (SELECT doc_id, ${md5h56("shingle")} & ${(1L << 55) - 1} AS h FROM sh),
          p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS nc
@@ -667,11 +700,11 @@ object CorpusOracles {
          SELECT source_a, source_b, CAST(n_pairs AS BIGINT) AS n_pairs,
                 n_pairs::DOUBLE / total_pairs::DOUBLE AS pair_share,
                 min_jaccard, max_jaccard
-         FROM m CROSS JOIN t ORDER BY source_a, source_b""",
+         FROM m CROSS JOIN t ORDER BY source_a, source_b"""),
 
     // X94: hard-negative mining — q34's brute-force ranking restricted
     // to different-label corpus vectors
-    "q110_hard_negatives" ->
+    QueryDef("q110_hard_negatives", CorpusQueries.hardNegatives(_, _),
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label AS qlabel
               FROM embeddings WHERE vec_id < 10),
           c AS (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id >= 10),
@@ -683,64 +716,41 @@ object CorpusOracles {
                                      ORDER BY sim DESC, vec_id) AS rnk
                 FROM s)
           SELECT query_id, vec_id, neg_label, rnk, sim FROM r WHERE rnk <= 5
-          ORDER BY query_id, rnk""",
+          ORDER BY query_id, rnk"""),
 
-    // X91: incremental cross-snapshot dedup — new snapshot (src10+)
-    // probed against the indexed corpus (src0–src9) on hashed shingles.
-    // The SAME oracle also gates q120, the X101 STREAMING face of the
-    // operator: per-doc verdicts depend only on (doc, index), never on
-    // which micro-batch carried the doc, so batch and foreachBatch
-    // compositions must produce identical tables.
-    "q107_incremental_neardup" ->
-      s"""WITH $shingleCte,
-         shh AS (SELECT doc_id, ${md5h56("shingle")} & ${(1L << 55) - 1} AS h FROM sh),
-         sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         srcn AS (SELECT doc_id, replace(source, 'src', '')::INT AS sn FROM documents),
-         bsh AS (SELECT shh.doc_id, h FROM shh JOIN srcn USING (doc_id) WHERE sn >= 10),
-         ish AS (SELECT shh.doc_id, h FROM shh JOIN srcn USING (doc_id) WHERE sn < 10),
-         m AS (SELECT b.doc_id AS batch_id, i.doc_id AS index_id, count(*) AS nc
-               FROM bsh b JOIN ish i ON b.h = i.h GROUP BY 1, 2),
-         mj AS (SELECT batch_id, index_id,
-                  nc::DOUBLE/(sb.n + si.n - nc) AS jaccard
-                FROM m JOIN sz sb ON batch_id = sb.doc_id
-                       JOIN sz si ON index_id = si.doc_id
-                WHERE nc::DOUBLE/(sb.n + si.n - nc) >= 0.5),
-         v AS (SELECT batch_id AS doc_id, min(index_id) AS dup_of,
-                 count(*) AS n_matches, max(jaccard) AS best_jaccard
-               FROM mj GROUP BY 1)
-         SELECT d.doc_id, v.dup_of IS NOT NULL AS is_dup, v.dup_of,
-                coalesce(v.n_matches, 0)::BIGINT AS n_matches, v.best_jaccard
-         FROM (SELECT doc_id FROM srcn WHERE sn >= 10) d
-         LEFT JOIN v USING (doc_id) ORDER BY d.doc_id""",
+    QueryDef("q107_incremental_neardup", CorpusQueries.incrementalNearDedup(_, _),
+      incrementalNearDupSql),
+    QueryDef("q120_streaming_neardup", CorpusQueries.streamingNearDedup(_, _),
+      incrementalNearDupSql),
 
-    "q53_hash_split" ->
+    QueryDef("q53_hash_split", CorpusQueries.hashSplit(_, _),
       s"""WITH b AS (SELECT lang,
             (${md5h56("doc_id::VARCHAR")}) % 100 AS bucket FROM documents)
          SELECT CASE WHEN bucket < 80 THEN 'train'
                      WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
                 lang, count(*) AS n
-         FROM b GROUP BY 1, 2 ORDER BY split, lang""",
+         FROM b GROUP BY 1, 2 ORDER BY split, lang"""),
 
-    "q54_hash_shuffle" ->
+    QueryDef("q54_hash_shuffle", CorpusQueries.hashShuffle(_, _),
       s"""SELECT doc_id, ${md5h56("doc_id::VARCHAR")} AS h
-         FROM documents ORDER BY h, doc_id LIMIT 100""",
+         FROM documents ORDER BY h, doc_id LIMIT 100"""),
 
     // q56: the same hash-threshold membership the Spark side evaluates —
     // round() mirrors Sampling.keep's round(rate*Denom), so arbitrary
     // rates (not just integer-exact ones) stay engine-consistent
-    "q56_stratified_sample" ->
+    QueryDef("q56_stratified_sample", CorpusQueries.stratifiedSample(_, _),
       s"""WITH k AS (SELECT lang, doc_id,
             (${md5h56("doc_id::VARCHAR")}) % 1000000 AS r FROM documents)
          SELECT lang, count(*) AS n_kept, min(doc_id) AS first_id
          FROM k
          WHERE r < CAST(round(CASE lang WHEN 'en' THEN 0.5 WHEN 'zh' THEN 1.0
                         ELSE 0.25 END * 1000000) AS BIGINT)
-         GROUP BY lang ORDER BY lang""",
+         GROUP BY lang ORDER BY lang"""),
 
     // q57: eval slice = md5(doc_id) % 20 == 0; shared distinct 4-grams per
     // corpus doc. Mirrors Contamination.overlapReport (same plain md5h56
     // shingle hash, distinct-per-doc shingles × distinct eval hashes).
-    "q57_decontaminate" ->
+    QueryDef("q57_decontaminate", CorpusQueries.decontaminate(_, _),
       s"""WITH ${shingleCteN(4)},
          shh AS (SELECT doc_id, ${md5h56("shingle")} AS h FROM sh),
          ev AS (SELECT DISTINCT h FROM shh
@@ -749,12 +759,12 @@ object CorpusOracles {
                 WHERE (${md5h56("doc_id::VARCHAR")}) % 20 <> 0)
          SELECT doc_id, count(*) AS n_shared_ngrams
          FROM co JOIN ev USING (h)
-         GROUP BY 1 ORDER BY doc_id""",
+         GROUP BY 1 ORDER BY doc_id"""),
 
     // q58: per-doc repetition filters; bigram CTE mirrors NGramShingles
     // (distinct shingles; a <2-token doc yields its whole token list), the
     // positional total is max(len-2,0)+1 by the same convention.
-    "q58_repetition" ->
+    QueryDef("q58_repetition", CorpusQueries.repetition(_, _),
       """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
          tc AS (SELECT doc_id, t, count(*) AS c FROM tok GROUP BY 1, 2),
          d AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
@@ -775,11 +785,11 @@ object CorpusOracles {
                            AND 1.0 - nb_distinct::DOUBLE / nb_total <= 0.05
                      THEN 1 ELSE 0 END AS BIGINT) AS keep
          FROM d JOIN b ON d.doc_id = b.doc_id
-         ORDER BY d.doc_id""",
+         ORDER BY d.doc_id"""),
 
     // q59: windowed integer sum → HUGEINT in DuckDB; CAST back to BIGINT
     // before the floor/divide (and on every aggregate) per the q42 rule.
-    "q59_pack_sequences" ->
+    QueryDef("q59_pack_sequences", CorpusQueries.packSequences(_, _),
       s"""WITH t AS (SELECT doc_id,
               (length(text) - length(replace(text, ' ', '')) + 1)::BIGINT AS n_tok,
               ${md5h56("doc_id::VARCHAR")} AS h,
@@ -794,11 +804,11 @@ object CorpusOracles {
          bins AS (SELECT shard, n_tok,
                     CAST(floor(prefix / 256) AS BIGINT) AS bin FROM p)
          SELECT shard, bin, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS tok_sum
-         FROM bins GROUP BY 1, 2 ORDER BY shard, bin""",
+         FROM bins GROUP BY 1, 2 ORDER BY shard, bin"""),
 
     // q60: identical double-division order as the Spark side (share first,
     // then target/share).
-    "q60_domain_mix" ->
+    QueryDef("q60_domain_mix", CorpusQueries.domainMix(_, _),
       """WITH s AS (SELECT source, count(*) AS n_docs,
                  CAST(sum(length(text) - length(replace(text, ' ', '')) + 1)
                       AS BIGINT) AS tok_sum
@@ -811,14 +821,14 @@ object CorpusOracles {
                FROM s CROSS JOIN t)
          SELECT source, n_docs, tok_sum, token_share,
                 least(1.0, (1.0 / n_sources::DOUBLE) / token_share) AS sample_weight
-         FROM x ORDER BY source""",
+         FROM x ORDER BY source"""),
 
-    "q61_row_ids" ->
+    QueryDef("q61_row_ids", CorpusQueries.rowIds(_, _),
       s"""SELECT doc_id,
            row_number() OVER (ORDER BY ${md5h56("doc_id::VARCHAR")}, doc_id) - 1 AS seq
-         FROM documents ORDER BY seq""",
+         FROM documents ORDER BY seq"""),
 
-    "q48_tfidf" ->
+    QueryDef("q48_tfidf", CorpusQueries.tfidfTopTerms(_, _),
       """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
                       FROM documents),
          tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
@@ -832,11 +842,11 @@ object CorpusOracles {
                                     ORDER BY tfidf DESC, token) AS rnk
                FROM scored)
          SELECT doc_id, token, tfidf, rnk FROM r WHERE rnk <= 3
-         ORDER BY doc_id, rnk""",
+         ORDER BY doc_id, rnk"""),
 
     // X48: 10-token chunks, corpus-wide keep-first under (doc_id, idx),
     // docs reassembled from survivors — NULL when nothing survives
-    "q67_chunk_dedup" ->
+    QueryDef("q67_chunk_dedup", CorpusQueries.chunkDedup(_, _),
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          ch AS (SELECT doc_id, unnest(range(0, ((len(w) + 9) // 10))) AS chunk_idx, w
                 FROM w),
@@ -849,10 +859,10 @@ object CorpusOracles {
          SELECT doc_id, count(*) AS n_chunks,
                 count(*) FILTER (rn = 1) AS n_kept,
                 string_agg(chunk, ' ' ORDER BY chunk_idx) FILTER (rn = 1) AS new_text
-         FROM r GROUP BY doc_id ORDER BY doc_id""",
+         FROM r GROUP BY doc_id ORDER BY doc_id"""),
 
     // X49: SCD2 intervals from the events change log
-    "q68_scd2" ->
+    QueryDef("q68_scd2", CorpusQueries.scd2(_, _),
       """WITH l AS (SELECT user_id, event_type, ts, event_id,
                  lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
                FROM events),
@@ -862,11 +872,11 @@ object CorpusOracles {
                 lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
                 CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS version,
                 (lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL) AS is_current
-         FROM c ORDER BY user_id, version""",
+         FROM c ORDER BY user_id, version"""),
 
     // X50: per-source token-budget quota in content-hash order (the
     // windowed integer sum is CAST to BIGINT — HUGEINT drift rule)
-    "q69_token_budget" ->
+    QueryDef("q69_token_budget", CorpusQueries.tokenBudget(_, _),
       s"""WITH d AS (SELECT doc_id, source,
                   (length(text) - length(replace(text, ' ', '')) + 1) AS n_tok,
                   ${md5h56("doc_id::VARCHAR")} AS h
@@ -877,11 +887,11 @@ object CorpusOracles {
                FROM d)
          SELECT source, count(*) AS n_docs_kept, CAST(sum(n_tok) AS BIGINT) AS tok_kept,
                 max(cum) AS tok_cum_at_cut
-         FROM c WHERE cum - n_tok < 512 GROUP BY source ORDER BY source""",
+         FROM c WHERE cum - n_tok < 512 GROUP BY source ORDER BY source"""),
 
     // X52: same three replacements, same fixed order, identical RE2/Java
     // regex subset; DuckDB needs the explicit 'g' flag Spark implies
-    "q71_redact" ->
+    QueryDef("q71_redact", CorpusQueries.redact(_, _),
       s"""SELECT doc_id,
             regexp_replace(regexp_replace(regexp_replace(
               source || '_' || doc_id::VARCHAR || '@example.com' || ' tel ' ||
@@ -891,29 +901,29 @@ object CorpusOracles {
               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z][A-Za-z]+', '<EMAIL>', 'g'),
               '([0-9]{1,3}\\.){3}[0-9]{1,3}', '<IP>', 'g'),
               '[0-9][0-9][0-9][0-9][0-9]+', '<NUM>', 'g') AS redacted
-         FROM documents ORDER BY doc_id""",
+         FROM documents ORDER BY doc_id"""),
 
     // X53: integer-exact weighted Bernoulli — 140737488355328 = 2^56/512
-    "q72_weighted_sample" ->
+    QueryDef("q72_weighted_sample", CorpusQueries.weightedSample(_, _),
       s"""WITH d AS (SELECT doc_id, source,
                   (length(text) - length(replace(text, ' ', '')) + 1) AS n_tok,
                   ${md5h56("doc_id::VARCHAR")} AS h
                 FROM documents)
          SELECT source, count(*) AS n_kept, CAST(sum(n_tok) AS BIGINT) AS tok_kept
          FROM d WHERE h < 140737488355328 * least(n_tok, 512)
-         GROUP BY source ORDER BY source""",
+         GROUP BY source ORDER BY source"""),
 
     // X54: exact top-20 token counts are the hash-gated payload; est_ok
     // TRUE asserts the Spark-side CMS estimate sits in [exact, exact+N/256]
-    "q73_cms_topk" ->
+    QueryDef("q73_cms_topk", CorpusQueries.cmsTopk(_, _),
       """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
          c AS (SELECT token, count(*) AS n_exact FROM tok GROUP BY 1)
          SELECT token, n_exact, TRUE AS est_ok
-         FROM c ORDER BY n_exact DESC, token LIMIT 20""",
+         FROM c ORDER BY n_exact DESC, token LIMIT 20"""),
 
     // X56: identical Morton shift/mask cascade (DuckDB lateral alias
     // references keep it readable); all intermediates < 2^33
-    "q74_zorder" ->
+    QueryDef("q74_zorder", CorpusQueries.zorderProfile(_, _),
       """WITH base AS (
            SELECT (o_custkey & 65535) AS a0,
                   (date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) & 65535) AS b0
@@ -930,11 +940,11 @@ object CorpusOracles {
                   (az | (bz << 1)) AS z
            FROM base)
          SELECT z >> 20 AS z_bucket, count(*) AS n, min(z) AS z_min, max(z) AS z_max
-         FROM sp GROUP BY 1 ORDER BY 1""",
+         FROM sp GROUP BY 1 ORDER BY 1"""),
 
     // X57: keep-first inside the batch, then NOT EXISTS vs the history
     // fingerprint set — the plain-SQL twin of the anti-join pipeline
-    "q75_incremental_dedup" ->
+    QueryDef("q75_incremental_dedup", CorpusQueries.incrementalDedup(_, _),
       """WITH b AS (SELECT doc_id, md5(text) AS fingerprint FROM documents
                     WHERE doc_id % 5 = 0),
          hist AS (SELECT DISTINCT md5(text) AS fingerprint FROM documents
@@ -945,12 +955,12 @@ object CorpusOracles {
          SELECT doc_id, fingerprint FROM k
          WHERE rn = 1 AND NOT EXISTS
            (SELECT 1 FROM hist WHERE hist.fingerprint = k.fingerprint)
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
 
     // X228: the maintained index's content is hist ∪ (b1 \ hist) =
     // hist ∪ b1 — the twin pins that in-place maintenance is invisible
     // to query semantics (its history set is simply doc_id % 5 >= 1)
-    "q229_index_maintenance" ->
+    QueryDef("q229_index_maintenance", CorpusQueries.indexMaintenance(_, _),
       """WITH hist2 AS (SELECT DISTINCT md5(text) AS fingerprint
                         FROM documents WHERE doc_id % 5 >= 1),
          b2 AS (SELECT doc_id, md5(text) AS fingerprint FROM documents
@@ -961,16 +971,16 @@ object CorpusOracles {
          SELECT doc_id, fingerprint FROM k
          WHERE rn = 1 AND NOT EXISTS
            (SELECT 1 FROM hist2 WHERE hist2.fingerprint = k.fingerprint)
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
 
     // X60: prefix filtering is exact — the oracle is the same all-pairs
     // Jaccard join the banded/LSH operators verify against, at the
     // prefix join's own parameters (4-gram shingles, threshold 0.6)
-    "q78_setsim_join" -> jaccardPairsN(4, 0.6),
+    QueryDef("q78_setsim_join", CorpusQueries.setsimJoin(_, _), jaccardPairsN(4, 0.6)),
 
     // X61: per column, the last non-null write after the key's last
     // delete; the key survives iff an upsert follows the last delete
-    "q79_apply_changes" ->
+    QueryDef("q79_apply_changes", CorpusQueries.applyChanges(_, _),
       """WITH log AS (
            SELECT user_id, event_id, event_type,
                   CASE WHEN event_type <> 'view' THEN value END AS value,
@@ -999,20 +1009,20 @@ object CorpusOracles {
            CASE WHEN o_val > last_del THEN v_val END AS value,
            CASE WHEN o_props > last_del THEN v_props END AS props
          FROM agg WHERE last_up > last_del
-         ORDER BY user_id""",
+         ORDER BY user_id"""),
 
     // X62: exact interpolated percentiles over price cents; the sketch
     // estimate itself is engine-internal, its rank bound rides as est_ok
-    "q80_quantile_sketch" ->
+    QueryDef("q80_quantile_sketch", CorpusQueries.quantileSketch(_, _),
       """SELECT l_returnflag,
                 quantile_cont(CAST(round(l_extendedprice*100) AS BIGINT), 0.5) AS p50,
                 quantile_cont(CAST(round(l_extendedprice*100) AS BIGINT), 0.9) AS p90,
                 TRUE AS est_ok
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
+         FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
     // X63: postings encoded doc_id*128 + pos (0-based); head = 20
     // smallest encodings per token
-    "q81_inverted_index" ->
+    QueryDef("q81_inverted_index", CorpusQueries.invertedIndex(_, _),
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          p AS (SELECT doc_id,
                  unnest(list_transform(range(1, len(w)+1),
@@ -1024,12 +1034,12 @@ object CorpusOracles {
                 count(*) AS n_occ,
                 array_to_string(list_sort(list(enc))[1:20], ',') AS postings_head
          FROM f GROUP BY 1 HAVING count(DISTINCT enc // 128) >= 25
-         ORDER BY 1""",
+         ORDER BY 1"""),
 
     // X64: the full curation chain — each stage the already-gated twin
     // (quality q27, repetition q58, keep-first q24, decontamination q57,
     // token budget q69), composed as one CTE pipeline
-    "q82_curate" ->
+    QueryDef("q82_curate", CorpusQueries.curate(_, _),
       s"""WITH base AS (SELECT doc_id, text, source,
                         ${md5h56("doc_id::VARCHAR")} AS dh FROM documents),
          corpus AS (SELECT * FROM base WHERE dh % 20 <> 0),
@@ -1078,10 +1088,10 @@ object CorpusOracles {
                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
                  FROM t)
          SELECT source, count(*) AS n_docs_kept, CAST(sum(n_tok) AS BIGINT) AS tok_kept
-         FROM cum WHERE cum - n_tok < 512 GROUP BY 1 ORDER BY 1""",
+         FROM cum WHERE cum - n_tok < 512 GROUP BY 1 ORDER BY 1"""),
 
     // X58: step-i time = earliest matching event strictly after step i-1
-    "q76_funnel" ->
+    QueryDef("q76_funnel", CorpusQueries.funnel(_, _),
       """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
                      WHERE event_type = 'view' GROUP BY 1),
          s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
@@ -1095,10 +1105,10 @@ object CorpusOracles {
                        + (CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
                   AS steps_completed
          FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)
-         ORDER BY user_id""",
+         ORDER BY user_id"""),
 
     // X59: cohort = week of first activity; offsets are whole weeks
-    "q77_retention" ->
+    QueryDef("q77_retention", CorpusQueries.retention(_, _),
       """WITH act AS (SELECT DISTINCT user_id,
                         CAST(date_trunc('week', ts) AS DATE) AS p
                       FROM events),
@@ -1106,22 +1116,22 @@ object CorpusOracles {
          SELECT cohort, date_diff('day', cohort, p) // 7 AS week_offset,
                 CAST(count(DISTINCT user_id) AS BIGINT) AS n_active
          FROM act JOIN first USING (user_id)
-         GROUP BY 1, 2 ORDER BY 1, 2""",
+         GROUP BY 1, 2 ORDER BY 1, 2"""),
 
     // X51: the bloom filter is invisible in the result — the oracle is
     // the plain EXISTS semi join
-    "q70_bloom_semi" ->
+    QueryDef("q70_bloom_semi", CorpusQueries.bloomSemiJoin(_, _),
       """SELECT l_returnflag, count(*) AS n_lines,
                 CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
          FROM lineitem l
          WHERE EXISTS (SELECT 1 FROM orders o
                        WHERE o.o_orderkey = l.l_orderkey AND o.o_totalprice > 400000)
-         GROUP BY 1 ORDER BY 1""",
+         GROUP BY 1 ORDER BY 1"""),
 
     // X65: BM25 with the un-logged RSJ idf (ln is libm-dependent; the
     // odds ratio is IEEE-exact); per-doc totals are a FIXED left-assoc
     // sum over the constant term list, not an order-dependent reduction
-    "q83_bm25_topk" ->
+    QueryDef("q83_bm25_topk", CorpusQueries.bm25TopK(_, _),
       """WITH b AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          b2 AS (SELECT doc_id, len(w)::BIGINT AS len, w FROM b),
          stats AS (SELECT count(*) AS n_docs, sum(len) AS sum_len FROM b2),
@@ -1151,14 +1161,14 @@ object CorpusOracles {
                 FROM piv)
          SELECT doc_id, score,
                 CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rnk
-         FROM sc ORDER BY score DESC, doc_id LIMIT 10""",
+         FROM sc ORDER BY score DESC, doc_id LIMIT 10"""),
 
     // X66: add-one-smoothed bigram LM trained on the corpus itself;
     // mean probability (not log-prob — ln is libm-dependent). The
     // per-doc sum runs on floor(p*1e12) BIGINTs — associative and
     // order-free in both engines (a double sum would depend on fold
     // order), exactly like the Spark aggregate
-    "q84_bigram_lm" ->
+    QueryDef("q84_bigram_lm", CorpusQueries.bigramLm(_, _),
       """WITH b AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          bg AS (SELECT doc_id,
                   unnest(list_transform(range(0, greatest(len(w) - 1, 0)),
@@ -1180,12 +1190,12 @@ object CorpusOracles {
          SELECT doc_id, n_bigrams,
                 (sum_ps::DOUBLE / 1e12) / n_bigrams::DOUBLE AS mean_p,
                 (sum_ps::DOUBLE / 1e12) / n_bigrams::DOUBLE >= 0.0335 AS keep
-         FROM d ORDER BY doc_id""",
+         FROM d ORDER BY doc_id"""),
 
     // X67: the KMV estimate is one division on the 256th-smallest
     // distinct hash — the oracle replays the ENTIRE estimator, not just
     // a verdict; 255·2^56 is an exactly-representable double
-    "q85_kmv_distinct" ->
+    QueryDef("q85_kmv_distinct", CorpusQueries.kmvDistinct(_, _),
       s"""WITH h AS (SELECT DISTINCT event_type,
                        ${md5h56("user_id::VARCHAR")} AS h FROM events),
           r AS (SELECT event_type, h,
@@ -1200,12 +1210,12 @@ object CorpusOracles {
                 FROM g)
           SELECT event_type, nd::BIGINT AS n_exact, est,
                  abs(est / nd::DOUBLE - 1.0) <= 0.2 AS est_ok
-          FROM e ORDER BY event_type""",
+          FROM e ORDER BY event_type"""),
 
     // X68: integer-scaled products make the Gram reduction associative —
     // any grouping order gives the same longs; covariance is derived
     // per cell with the identical op sequence
-    "q86_gram_matrix" ->
+    QueryDef("q86_gram_matrix", CorpusQueries.gramMatrix(_, _),
       """WITH e AS (SELECT embedding AS v FROM embeddings),
          cells AS (SELECT i, j FROM range(0, 64) t1(i), range(0, 64) t2(j)
                    WHERE j >= i),
@@ -1224,11 +1234,11 @@ object CorpusOracles {
                 ((si.s::DOUBLE / 1000000000.0) / n::DOUBLE) *
                 ((sj.s::DOUBLE / 1000000000.0) / n::DOUBLE) AS cov
          FROM g JOIN s1 si ON si.i = g.i JOIN s1 sj ON sj.i = g.j
-         ORDER BY g.i, g.j""",
+         ORDER BY g.i, g.j"""),
 
     // X69: 20-token windows at stride 10; DuckDB's inclusive slice
     // w[s+1 : s+20] is the 20-element twin of Spark's slice(w, s+1, 20)
-    "q87_sliding_chunks" ->
+    QueryDef("q87_sliding_chunks", CorpusQueries.slidingChunks(_, _),
       """WITH b AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents
                     WHERE len(string_split(text, ' ')) >= 1),
          c AS (SELECT doc_id, len(w)::BIGINT AS l, unnest(range(0, len(w), 10)) AS s, w
@@ -1236,22 +1246,22 @@ object CorpusOracles {
          SELECT doc_id, s // 10 AS chunk_idx, s AS start_tok,
                 least(20, l - s) AS n_tok,
                 md5(array_to_string(w[s + 1 : s + 20], ' ')) AS fp
-         FROM c ORDER BY doc_id, chunk_idx""",
+         FROM c ORDER BY doc_id, chunk_idx"""),
 
     // X70: exactly-k-per-stratum deterministic sample — the k smallest
     // content-stable hashes per source
-    "q88_strata_sample" ->
+    QueryDef("q88_strata_sample", CorpusQueries.strataSample(_, _),
       s"""WITH h AS (SELECT source, doc_id,
                        ${md5h56("doc_id::VARCHAR")} AS h FROM documents),
           r AS (SELECT source, doc_id,
                   row_number() OVER (PARTITION BY source ORDER BY h, doc_id) AS rn
                 FROM h)
           SELECT source, doc_id, CAST(rn AS BIGINT) AS rnk
-          FROM r WHERE rn <= 20 ORDER BY source, rnk""",
+          FROM r WHERE rn <= 20 ORDER BY source, rnk"""),
 
     // X71: median/MAD robust outliers; quantile_cont is the proven twin
     // of the bracketing-bucket exact percentile operator (q47)
-    "q89_mad_outliers" ->
+    QueryDef("q89_mad_outliers", CorpusQueries.madOutliers(_, _),
       s"""WITH t AS (SELECT doc_id, source, $tokenCount::BIGINT AS n_tok
                      FROM documents),
           med AS (SELECT source, quantile_cont(n_tok::DOUBLE, 0.5) AS med
@@ -1261,11 +1271,11 @@ object CorpusOracles {
                 FROM t JOIN med USING (source)),
           mad AS (SELECT source, quantile_cont(dev, 0.5) AS mad FROM d GROUP BY 1)
           SELECT doc_id, source, n_tok, dev, dev > mad * 3.0 AS is_outlier
-          FROM d JOIN mad USING (source) ORDER BY doc_id""",
+          FROM d JOIN mad USING (source) ORDER BY doc_id"""),
 
     // X72: integer moment sums (exact in any engine), closed-form
     // slope/intercept/r² with one division each
-    "q90_group_regression" ->
+    QueryDef("q90_group_regression", CorpusQueries.groupRegression(_, _),
       s"""WITH t AS (SELECT source, $tokenCount::BIGINT AS x, n_chars AS y
                      FROM documents),
           m AS (SELECT source, count(*) AS n,
@@ -1279,11 +1289,11 @@ object CorpusOracles {
                    / n::DOUBLE AS intercept,
                  ((n * sxy - sx * sy)::DOUBLE * (n * sxy - sx * sy)::DOUBLE) /
                  ((n * sxx - sx * sx)::DOUBLE * (n * syy - sy * sy)::DOUBLE) AS r2
-          FROM m ORDER BY source""",
+          FROM m ORDER BY source"""),
 
     // X73: octile boundaries from quantile_cont (the proven twin of the
     // exact percentile operator); bucket = count of boundaries <= v
-    "q91_equidepth_hist" ->
+    QueryDef("q91_equidepth_hist", CorpusQueries.equiDepthHist(_, _),
       s"""WITH b AS (SELECT l_returnflag,
                   ${(1 to 7).map(i => s"quantile_cont(l_extendedprice, ${i / 8.0}) AS b$i").mkString(", ")}
                 FROM lineitem GROUP BY 1)
@@ -1292,12 +1302,12 @@ object CorpusOracles {
                  count(*) AS n,
                  min(l_extendedprice) AS lo, max(l_extendedprice) AS hi
           FROM lineitem JOIN b USING (l_returnflag)
-          GROUP BY 1, 2 ORDER BY 1, 2""",
+          GROUP BY 1, 2 ORDER BY 1, 2"""),
 
     // X74: distinct 4-gram shingle hashes per doc; novelty = share of
     // shingles with corpus doc-frequency 1. The shingle CTE is already
     // distinct per doc, so df = plain COUNT(*) (mirrors the Spark side)
-    "q92_novelty" ->
+    QueryDef("q92_novelty", CorpusQueries.noveltyScore(_, _),
       s"""WITH ${shingleCteN(4)},
           shh AS (SELECT doc_id, ${md5h56("shingle")} AS h FROM sh),
           dfreq AS (SELECT h, count(*) AS df FROM shh GROUP BY 1)
@@ -1306,12 +1316,12 @@ object CorpusOracles {
                  CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT)::DOUBLE /
                    count(*)::DOUBLE AS novelty
           FROM shh JOIN dfreq USING (h)
-          GROUP BY 1 ORDER BY 1""",
+          GROUP BY 1 ORDER BY 1"""),
 
     // X77: 10 unrolled PageRank rounds in integer fixed-point — all
     // truncating `//` on positives (== Spark `div`) and exact long sums,
     // so every round replays bit-for-bit
-    "q94_token_pagerank" -> {
+    QueryDef("q94_token_pagerank", CorpusQueries.tokenPagerank(_, _), {
       val rounds = (1 to 10).map { i =>
         s"""r$i AS (SELECT nodes.node,
               CAST((15 * (1000000000000 // n)) // 100 +
@@ -1336,11 +1346,11 @@ object CorpusOracles {
          $rounds
          SELECT node, rank AS rank_scaled FROM r10
          ORDER BY rank_scaled DESC, node"""
-    },
+    }),
 
     // X78: full-outer digest-join snapshot diff over the simulated
     // old/new corpus versions (hash splits mirror the Spark query)
-    "q95_snapshot_diff" ->
+    QueryDef("q95_snapshot_diff", CorpusQueries.snapshotDiff(_, _),
       s"""WITH d AS (SELECT doc_id, text,
                        ${md5h56("doc_id::VARCHAR")} AS dh FROM documents),
           olds AS (SELECT doc_id AS id, md5(text) AS ha FROM d WHERE dh % 11 <> 0),
@@ -1354,12 +1364,12 @@ object CorpusOracles {
                        ELSE 'unchanged' END AS status
                 FROM olds FULL OUTER JOIN news ON olds.id = news.id)
           SELECT status, count(*) AS n, min(id) AS first_id, max(id) AS last_id
-          FROM j GROUP BY 1 ORDER BY 1""",
+          FROM j GROUP BY 1 ORDER BY 1"""),
 
     // X79: the data-card profile — every stat the already-gated kernel
     // (counts, weighted median, fingerprints, KMV), composed; the KMV
     // estimator is replayed on the 256th-smallest distinct fp hash
-    "q96_corpus_profile" -> {
+    QueryDef("q96_corpus_profile", CorpusQueries.corpusProfile(_, _), {
       val fp = "md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))"
       s"""WITH t AS (SELECT source, $tokenCount::BIGINT AS n_tok,
                        ${md5h56(fp)} AS fph FROM documents),
@@ -1383,12 +1393,12 @@ object CorpusOracles {
                  abs(est / ndf::DOUBLE - 1.0) <= 0.2 AS fp_est_ok
           FROM a JOIN m USING (source) JOIN e USING (source)
           ORDER BY source"""
-    },
+    }),
 
     // X80: the merge algebra in plain SQL — counts/sums add, extrema
     // fold through coalesce pairs, KMV union = sort(distinct(concat))
     // truncated to k; gate proves merged state == direct aggregation
-    "q97_incremental_rollup" ->
+    QueryDef("q97_incremental_rollup", CorpusQueries.incrementalRollup(_, _),
       s"""WITH d AS (SELECT source, doc_id, $tokenCount::BIGINT AS n_tok,
                        ${md5h56("doc_id::VARCHAR")} AS dh FROM documents),
           hist AS (SELECT source, count(*) AS n, CAST(sum(n_tok) AS BIGINT) AS tok,
@@ -1416,11 +1426,11 @@ object CorpusOracles {
                  (m.n = d.n AND m.tok = d.tok AND m.mn = d.mn AND m.mx = d.mx
                   AND m.sk = d.sk) AS merge_exact
           FROM merged m JOIN direct d ON m.source = d.source
-          ORDER BY m.source""",
+          ORDER BY m.source"""),
 
     // X81: two-sample chi-square drift between hash halves; the total
     // folds per-token terms in token order (ordered-fold pattern)
-    "q98_distribution_drift" ->
+    QueryDef("q98_distribution_drift", CorpusQueries.distributionDrift(_, _),
       s"""WITH d AS (SELECT text,
                        (${md5h56("doc_id::VARCHAR")}) % 2 AS half FROM documents),
           tok AS (SELECT half, unnest(string_split(text, ' ')) AS t FROM d),
@@ -1444,12 +1454,12 @@ object CorpusOracles {
                       u -> u.x)),
                   (a, x) -> a + x) AS chi2_total FROM p)
           SELECT t, ca, cb, chi2_term, chi2_total
-          FROM p CROSS JOIN s ORDER BY t""",
+          FROM p CROSS JOIN s ORDER BY t"""),
 
     // X83: NFC collapses composed/decomposed spellings — 2 raw
     // fingerprints, 1 normalized, per doc; nfc_normalize is the
     // Unicode-standard twin of java.text.Normalizer
-    "q100_nfc_dedup" ->
+    QueryDef("q100_nfc_dedup", CorpusQueries.nfcDedup(_, _),
       """WITH v AS (SELECT doc_id,
                       unnest([text || ' caf' || chr(233),
                               text || ' cafe' || chr(769)]) AS raw
@@ -1460,11 +1470,11 @@ object CorpusOracles {
                 CAST(count(DISTINCT raw_fp) AS BIGINT) AS n_raw_fps,
                 CAST(count(DISTINCT norm_fp) AS BIGINT) AS n_norm_fps,
                 min(norm_fp) AS norm_fp
-         FROM f GROUP BY 1 ORDER BY 1""",
+         FROM f GROUP BY 1 ORDER BY 1"""),
 
     // X85: the full quantized-retrieval evaluation replayed — quantize,
     // dequantize, fold-ordered cosine, both rankings, agreement join
-    "q101_pq_ann" ->
+    QueryDef("q101_pq_ann", CorpusQueries.pqAnn(_, _),
       s"""WITH cells AS (SELECT vec_id, i - 1 AS dim, embedding[i]::DOUBLE AS v
                          FROM embeddings, range(1, 65) t(i)),
           stats AS (SELECT dim, min(v) AS mn, max(v) AS mx FROM cells GROUP BY 1),
@@ -1492,11 +1502,11 @@ object CorpusOracles {
                  r.sim AS sim_q8, r.vec_id = fr.vec_id AS same_as_float
           FROM r JOIN fr ON r.query_id = fr.query_id AND r.rnk = fr.rnk
           WHERE r.rnk <= 5
-          ORDER BY r.query_id, rnk""",
+          ORDER BY r.query_id, rnk"""),
 
     // X86: duplicate-span excision — window fingerprints, corpus-wide
     // duplicate flagging, merged-span islands, positional token excision
-    "q102_span_excise" ->
+    QueryDef("q102_span_excise", CorpusQueries.spanExcise(_, _),
       """WITH b AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          wn AS (SELECT doc_id, unnest(range(0, len(w) - 20 + 1, 10)) AS s, w
                 FROM b WHERE len(w) >= 20),
@@ -1521,12 +1531,12 @@ object CorpusOracles {
          SELECT doc_id, n_tok, n_flagged_windows, n_spans,
                 (n_tok - len(cw))::BIGINT AS n_removed,
                 md5(coalesce(array_to_string(cw, ' '), '')) AS clean_fp
-         FROM fin ORDER BY doc_id""",
+         FROM fin ORDER BY doc_id"""),
 
     // X87: byte-level BPE training — the 5 learned merges + the
     // resulting top-20 subword vocabulary, symbols as UTF-8-byte hex
     // (see bpeByteCtes)
-    "q103_bpe_train" -> {
+    QueryDef("q103_bpe_train", CorpusQueries.bpeTrain(_, _), {
       val mergeUnion = (1 to 5).map { i =>
         s"""SELECT 'merge' AS kind, CAST($i AS BIGINT) AS rnk, l AS left_sym,
                    r AS right_sym, CAST(n AS BIGINT) AS weight FROM b$i"""
@@ -1540,11 +1550,11 @@ object CorpusOracles {
                   FROM vocab ORDER BY f DESC, sym LIMIT 20)
          SELECT * FROM ($mergeUnion UNION ALL SELECT * FROM topv)
          ORDER BY kind, rnk"""
-    },
+    }),
 
     // X88: the learned byte merges applied corpus-wide — hex-word-type
     // lookup join, per-doc word/subword counts
-    "q104_bpe_tokenize" ->
+    QueryDef("q104_bpe_tokenize", CorpusQueries.bpeTokenize(_, _),
       s"""WITH $bpeTrainingCtes,
          lut AS (SELECT array_to_string(syms, '') AS hword,
                    len(syms)::BIGINT AS n_sub FROM w5),
@@ -1552,11 +1562,11 @@ object CorpusOracles {
                 FROM documents)
          SELECT doc_id, count(*) AS n_words, sum(n_sub)::BIGINT AS n_subwords
          FROM dw JOIN lut ON hex(word) = hword
-         WHERE word <> '' GROUP BY 1 ORDER BY 1""",
+         WHERE word <> '' GROUP BY 1 ORDER BY 1"""),
 
     // X104: count-preserving dedup reweighting — keepers carry their
     // cluster size, singletons weigh 1
-    "q119_dedup_reweight" ->
+    QueryDef("q119_dedup_reweight", CorpusQueries.dedupReweight(_, _),
       s"""WITH RECURSIVE $dupGroupCtes,
          g AS (SELECT node AS doc_id, min(reach) AS group_id
                FROM r GROUP BY node),
@@ -1566,11 +1576,11 @@ object CorpusOracles {
          sg AS (SELECT doc_id, CAST(1 AS BIGINT) AS weight FROM documents
                 WHERE doc_id NOT IN (SELECT doc_id FROM g))
          SELECT doc_id, weight FROM (SELECT * FROM k UNION ALL SELECT * FROM sg)
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
 
     // X103: temperature-scaled domain mixing — weights ∝ sqrt(share),
     // normalizer folded in source order (engine-exact float sum)
-    "q118_temperature_mix" ->
+    QueryDef("q118_temperature_mix", CorpusQueries.temperatureMix(_, _),
       s"""WITH s AS (SELECT source, count(*) AS n_docs,
                  CAST(sum($tokenCount) AS BIGINT) AS tok_sum
                FROM documents GROUP BY 1),
@@ -1587,11 +1597,11 @@ object CorpusOracles {
                  (a, b) -> a + b) AS z FROM sh)
          SELECT source, n_docs, tok_sum, token_share,
                 sq / z AS temp_weight, (sq / z) / token_share AS boost
-         FROM sh CROSS JOIN z ORDER BY source""",
+         FROM sh CROSS JOIN z ORDER BY source"""),
 
     // X102: vocabulary coverage curve — cumulative token coverage at
     // fixed top-N vocab sizes, exact-long arithmetic
-    "q117_vocab_coverage" ->
+    QueryDef("q117_vocab_coverage", CorpusQueries.vocabCoverage(_, _),
       """WITH wc AS (SELECT t AS word, count(*) AS c FROM
              (SELECT unnest(string_split(text, ' ')) AS t FROM documents)
            WHERE t <> '' GROUP BY 1),
@@ -1609,11 +1619,11 @@ object CorpusOracles {
                 cum::DOUBLE / total_tokens::DOUBLE AS coverage
          FROM r CROSS JOIN tot
          WHERE rnk IN (5, 10, 20, 10000)
-         ORDER BY top_n""",
+         ORDER BY top_n"""),
 
     // X100: matryoshka truncation eval — 16-dim-prefix ranking vs the
     // full 64-dim ranking, rank-by-rank agreement
-    "q116_matryoshka_eval" ->
+    QueryDef("q116_matryoshka_eval", CorpusQueries.matryoshkaEval(_, _),
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
               WHERE vec_id < 10),
          c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 10),
@@ -1633,11 +1643,11 @@ object CorpusOracles {
                 rt.vec_id = rf.vec_id AS same_as_full
          FROM rt JOIN rf ON rt.query_id = rf.query_id AND rt.rnk = rf.rnk
          WHERE rt.rnk <= 5 AND rf.rnk <= 5
-         ORDER BY rt.query_id, rt.rnk""",
+         ORDER BY rt.query_id, rt.rnk"""),
 
     // X99: cluster purity — member count, majority label, purity per
     // X90 semantic cluster
-    "q115_cluster_purity" ->
+    QueryDef("q115_cluster_purity", CorpusQueries.clusterPurity(_, _),
       s"""WITH $semAssignCtes,
          al AS (SELECT a.vec_id, a.centroid_id, e.label
                 FROM asg a JOIN embeddings e ON a.vec_id = e.vec_id),
@@ -1650,11 +1660,11 @@ object CorpusOracles {
          SELECT centroid_id, CAST(n_vectors AS BIGINT) AS n_vectors,
                 label AS majority_label, CAST(c AS BIGINT) AS majority_count,
                 c::DOUBLE / n_vectors::DOUBLE AS purity
-         FROM r WHERE rn = 1 ORDER BY centroid_id""",
+         FROM r WHERE rn = 1 ORDER BY centroid_id"""),
 
     // X98: padding-waste report — power-of-2 length buckets, integer
     // waste sums, one utilization division
-    "q114_padding_waste" -> {
+    QueryDef("q114_padding_waste", CorpusQueries.paddingWaste(_, _), {
       val ladder = (0 to 16).map(i => 1L << i)
         .map(p => s"WHEN n <= $p THEN CAST($p AS BIGINT)").mkString(" ")
       s"""WITH d AS (SELECT doc_id, CAST($tokenCount AS BIGINT) AS n FROM documents),
@@ -1666,11 +1676,11 @@ object CorpusOracles {
                 CAST(sum(bucket_max - n) AS BIGINT) AS pad_tokens,
                 sum(n)::DOUBLE / (count(*) * bucket_max)::DOUBLE AS utilization
          FROM b GROUP BY 1 ORDER BY 1"""
-    },
+    }),
 
     // X96: retrieval eval — first-relevant rank, hit@10, macro MRR@10
     // with the reciprocal-rank sum integer-scaled by 2520 = lcm(1..10)
-    "q112_retrieval_eval" ->
+    QueryDef("q112_retrieval_eval", CorpusQueries.retrievalEval(_, _),
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label AS qlabel
               FROM embeddings WHERE vec_id < 10),
          c AS (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id >= 10),
@@ -1691,11 +1701,11 @@ object CorpusOracles {
          tot AS (SELECT CAST(sum(rr_scaled) AS BIGINT) AS srr, count(*) AS nq FROM p2)
          SELECT query_id, first_rel_rank, hit_at_10, n_rel_at_10, rr_scaled,
                 srr::DOUBLE / (nq::DOUBLE * 2520.0) AS mrr
-         FROM p2 CROSS JOIN tot ORDER BY query_id""",
+         FROM p2 CROSS JOIN tot ORDER BY query_id"""),
 
     // X97: collocation mining — top-20 adjacent pairs by PMI lift
     // c12*N/(c1*c2), support c12 >= 5
-    "q113_collocations" ->
+    QueryDef("q113_collocations", CorpusQueries.collocations(_, _),
       """WITH b AS (SELECT string_split(text, ' ') AS w FROM documents),
          bg AS (SELECT unnest(list_transform(range(0, greatest(len(w) - 1, 0)),
                     i -> struct_pack(w1 := w[i + 1], w2 := w[i + 2]))) AS u
@@ -1713,12 +1723,12 @@ object CorpusOracles {
                   JOIN uni u2 ON c12.w2 = u2.t
                   CROSS JOIN n
          WHERE c12 >= 5
-         ORDER BY lift DESC, w1, w2 LIMIT 20""",
+         ORDER BY lift DESC, w1, w2 LIMIT 20"""),
 
     // X95: tokenizer fertility — per-source tokens-per-word and REAL
     // bytes-per-token (octet_length, not character count) under the
     // trained byte-level BPE merges
-    "q111_tokenizer_fertility" ->
+    QueryDef("q111_tokenizer_fertility", CorpusQueries.tokenizerFertility(_, _),
       s"""WITH $bpeTrainingCtes,
          lut AS (SELECT array_to_string(syms, '') AS hword,
                    len(syms)::BIGINT AS n_sub FROM w5),
@@ -1730,22 +1740,22 @@ object CorpusOracles {
                 sum(strlen(word))::DOUBLE / sum(n_sub)::DOUBLE
                   AS bytes_per_token
          FROM dw JOIN lut ON hex(word) = hword
-         WHERE word <> '' GROUP BY 1 ORDER BY 1""",
+         WHERE word <> '' GROUP BY 1 ORDER BY 1"""),
 
     // X82: per-key probe-side counts, top-10 heavy keys, max/mean skew
-    "q99_skew_report" ->
+    QueryDef("q99_skew_report", CorpusQueries.skewReport(_, _),
       """WITH cnt AS (SELECT l_suppkey, count(*) AS n FROM lineitem GROUP BY 1),
          stats AS (SELECT count(*) AS n_keys, CAST(sum(n) AS BIGINT) AS total,
                      max(n) AS max_n FROM cnt)
          SELECT l_suppkey, n, n::DOUBLE / total::DOUBLE AS share, n_keys,
                 max_n::DOUBLE / (total::DOUBLE / n_keys::DOUBLE) AS skew_factor
          FROM cnt CROSS JOIN stats
-         ORDER BY n DESC, l_suppkey LIMIT 10""",
+         ORDER BY n DESC, l_suppkey LIMIT 10"""),
 
     // X106: per-dim standardization from floor-scaled integer moments
     // (associative long sums == the Spark LongVecSumAgg reduction);
     // z expression replayed with the identical op tree
-    "q122_standardize" ->
+    QueryDef("q122_standardize", CorpusQueries.standardizeEmbeddings(_, _),
       """WITH cells AS (SELECT vec_id, i - 1 AS dim, embedding[i]::DOUBLE AS v
                         FROM embeddings, range(1, 65) t(i)),
          stats AS (SELECT dim,
@@ -1762,11 +1772,11 @@ object CorpusOracles {
                 CASE WHEN var <= 0.0 THEN 0.0
                      ELSE (v - mean) / sqrt(var) END AS z
          FROM cells JOIN m USING (dim)
-         ORDER BY vec_id, dim""",
+         ORDER BY vec_id, dim"""),
 
     // X75: global per-dim affine int8 quantization + dequant error,
     // identical op order in both engines
-    "q93_quantize_int8" ->
+    QueryDef("q93_quantize_int8", CorpusQueries.quantizeInt8(_, _),
       """WITH cells AS (SELECT vec_id, i - 1 AS dim, embedding[i]::DOUBLE AS v
                         FROM embeddings, range(1, 65) t(i)),
          stats AS (SELECT dim, min(v) AS mn, max(v) AS mx FROM cells GROUP BY 1)
@@ -1777,12 +1787,12 @@ object CorpusOracles {
                   abs((CAST(round((v - mn) / (mx - mn) * 254.0 - 127.0) AS BIGINT)::DOUBLE
                          + 127.0) / 254.0 * (mx - mn) + mn - v) END AS err
          FROM cells JOIN stats USING (dim)
-         ORDER BY vec_id, dim""",
+         ORDER BY vec_id, dim"""),
 
     // X107: exact mutual-5-NN graph — each unordered pair's cosine
     // computed once (same fold as the Spark block-grid pass), mirrored,
     // per-source rank, mutual equi-join
-    "q123_mutual_knn" ->
+    QueryDef("q123_mutual_knn", CorpusQueries.mutualKnn(_, _),
       s"""WITH p AS (SELECT a.vec_id AS ida, b.vec_id AS idb,
                   ${cosine("a.embedding", "b.embedding")} AS sim
                 FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id),
@@ -1796,12 +1806,12 @@ object CorpusOracles {
                 a.rnk AS rnk_ab, b.rnk AS rnk_ba
          FROM k a JOIN k b ON a.src = b.dst AND a.dst = b.src
          WHERE a.src < a.dst
-         ORDER BY vec_a, vec_b""",
+         ORDER BY vec_a, vec_b"""),
 
     // X108: DSIR-style hashed importance scores — integer bucket counts,
     // one fixed-point ratio per bucket (exact long products, one
     // correctly-rounded division), exact long per-doc sums
-    "q124_dsir_weights" ->
+    QueryDef("q124_dsir_weights", CorpusQueries.dsirWeights(_, _),
       s"""WITH toks AS (SELECT doc_id,
                   (${md5h56("doc_id::VARCHAR")}) % 20 = 0 AS tgt,
                   (${md5h56("tok")}) % 4096 AS bkt
@@ -1819,11 +1829,11 @@ object CorpusOracles {
          SELECT doc_id, count(*) AS n_tokens, sum(w)::BIGINT AS score_fp,
                 (sum(w)::BIGINT::DOUBLE / count(*)::DOUBLE) / 1e9 AS avg_ratio
          FROM toks JOIN w USING (bkt) WHERE NOT tgt
-         GROUP BY doc_id ORDER BY doc_id""",
+         GROUP BY doc_id ORDER BY doc_id"""),
 
     // X109: C4/Gopher rule report — integer word-array folds, exact
     // double fractions, per-rule 0/1 flags + conjunctive keep
-    "q125_rule_filter" ->
+    QueryDef("q125_rule_filter", CorpusQueries.ruleFilter(_, _),
       """WITH m AS (SELECT doc_id, text, string_split(text, ' ') AS ws FROM documents),
          s AS (SELECT doc_id, text,
                  len(ws)::BIGINT AS n_words,
@@ -1860,11 +1870,11 @@ object CorpusOracles {
                 r_stopwords, r_end_punct, r_no_lorem, r_no_brace,
                 (r_word_count * r_mean_wl * r_alpha * r_symbol * r_stopwords
                  * r_end_punct * r_no_lorem * r_no_brace)::BIGINT AS keep
-         FROM f ORDER BY doc_id""",
+         FROM f ORDER BY doc_id"""),
 
     // X110: dedup threshold calibration — the q29 all-pairs core grouped
     // per candidate threshold; LEFT JOIN keeps zero-survivor rows
-    "q126_dedup_sweep" ->
+    QueryDef("q126_dedup_sweep", CorpusQueries.dedupSweep(_, _),
       s"""WITH $shingleCte,
          shh AS (SELECT doc_id, ${md5h56("shingle")} & ${(1L << 55) - 1} AS h FROM sh),
          p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS nc
@@ -1885,18 +1895,18 @@ object CorpusOracles {
          SELECT threshold, coalesce(n_pairs, 0) AS n_pairs,
                 coalesce(n_docs, 0) AS n_docs
          FROM t LEFT JOIN pt USING (threshold) LEFT JOIN dt USING (threshold)
-         ORDER BY threshold""",
+         ORDER BY threshold"""),
 
     // X111: deterministic Lloyd k-means, 2 unrolled rounds — lowest-id
     // seeds, cosine-argmax assignment (csim DESC, cid tiebreak),
     // fixed-point per-dim centroid means (floor-scaled long sums)
-    "q127_kmeans" -> kmeansOracle(rounds = 2,
+    QueryDef("q127_kmeans", CorpusQueries.kmeansTrain(_, _), kmeansOracle(rounds = 2,
       finalSelect = """SELECT vec_id, centroid_id, csim FROM fin
-         ORDER BY vec_id"""),
+         ORDER BY vec_id""")),
 
     // X112: leakage-safe groupwise split — the q50 components CTE, all
     // docs LEFT JOINed (singletons key by doc_id), q53 bucket convention
-    "q128_groupwise_split" ->
+    QueryDef("q128_groupwise_split", CorpusQueries.groupwiseSplit(_, _),
       s"""WITH RECURSIVE $dupGroupCtes,
          g AS (SELECT node AS doc_id, min(reach) AS group_id
                FROM r GROUP BY node),
@@ -1907,11 +1917,11 @@ object CorpusOracles {
          SELECT doc_id, group_id,
                 CASE WHEN bkt < 80 THEN 'train'
                      WHEN bkt < 90 THEN 'val' ELSE 'test' END AS split
-         FROM b ORDER BY doc_id""",
+         FROM b ORDER BY doc_id"""),
 
     // X113: per-label bottom-5 by cosine to the label's fixed-point
     // centroid (mislabeled-embedding sweep)
-    "q129_label_outliers" ->
+    QueryDef("q129_label_outliers", CorpusQueries.labelOutliers(_, _),
       s"""WITH cells AS (SELECT vec_id, label, i - 1 AS dim,
                   embedding[i]::DOUBLE AS v
                 FROM embeddings, range(1, 65) t(i)),
@@ -1928,13 +1938,13 @@ object CorpusOracles {
                  row_number() OVER (PARTITION BY label ORDER BY csim, vec_id) AS rnk
                FROM s)
          SELECT label, vec_id, csim, rnk FROM r WHERE rnk <= 5
-         ORDER BY label, vec_id""",
+         ORDER BY label, vec_id"""),
 
     // X114: k-center greedy coreset — 7 unrolled farthest-point rounds
     // from the lowest-id seed (argmin of max-cosine-to-chosen, vec_id
     // tiebreak), then nearest-center coverage with (csim DESC, center
     // ASC) tiebreak. Mirrors Coreset.kCenterGreedy round for round.
-    "q130_kcenter_coreset" -> {
+    QueryDef("q130_kcenter_coreset", CorpusQueries.kcenterCoreset(_, _), {
       // MATERIALIZED throughout: the chained c0→c7 CTEs are each
       // referenced twice per round, and inlining would re-evaluate the
       // whole prefix exponentially.
@@ -1966,14 +1976,14 @@ object CorpusOracles {
          SELECT v.vec_id, v.center_id, v.csim, r.sel_rank
          FROM cov v LEFT JOIN ranks r ON v.vec_id = r.vec_id
          WHERE rn = 1 ORDER BY v.vec_id"""
-    },
+    }),
 
     // X115: synchronous label propagation over the mutual-5-NN graph —
     // the q123 graph CTEs, then 3 unrolled frequency-vote rounds
     // (count DESC, min-label ties), isolated nodes keep their label.
     // MATERIALIZED: every label CTE feeds both the next vote and the
     // next coalesce, and inlining re-evaluates the chain exponentially.
-    "q131_knn_communities" -> {
+    QueryDef("q131_knn_communities", CorpusQueries.knnCommunities(_, _), {
       def round(i: Int): String =
         s"""v$i AS MATERIALIZED (SELECT b.dst AS vec_id, l.lbl, count(*) AS cnt
               FROM bid b JOIN l${i - 1} l ON b.src = l.vec_id GROUP BY 1, 2),
@@ -1990,12 +2000,12 @@ object CorpusOracles {
          sizes AS (SELECT lbl, count(*) AS n_members FROM l3 GROUP BY 1)
          SELECT vec_id, lbl AS community, n_members
          FROM l3 JOIN sizes USING (lbl) ORDER BY vec_id"""
-    },
+    }),
 
     // X116: winnowing (k=4-gram hashes, window w=4, rightmost-min
     // selection) then overlap pairs on DISTINCT selected fingerprint
     // values; replays WinnowFingerprints' selection rule relationally
-    "q132_winnow_overlap" ->
+    QueryDef("q132_winnow_overlap", CorpusQueries.winnowOverlap(_, _),
       s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          g0 AS (SELECT doc_id,
                unnest(list_transform(range(0, greatest(len(ws)-4, 0) + 1),
@@ -2016,11 +2026,11 @@ object CorpusOracles {
          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
          FROM sel a JOIN sel b ON a.h = b.h AND a.doc_id < b.doc_id
          GROUP BY 1, 2 HAVING count(*) >= 2
-         ORDER BY doc_a, doc_b""",
+         ORDER BY doc_a, doc_b"""),
 
     // X117: interval-overlap join — closed intervals, exact micro
     // intersection length; the banded plan is oracle-invisible
-    "q133_interval_join" ->
+    QueryDef("q133_interval_join", CorpusQueries.intervalJoin(_, _),
       """WITH v AS (SELECT event_id AS view_id, user_id, ts AS vs,
                  ts + INTERVAL 600 SECOND AS ve
                FROM events WHERE event_type = 'view'),
@@ -2030,22 +2040,22 @@ object CorpusOracles {
          SELECT v.user_id AS user_id, view_id, click_id,
                 (epoch_us(least(ve, ce)) - epoch_us(greatest(vs, cs))) AS overlap_micros
          FROM v JOIN c ON v.user_id = c.user_id AND vs <= ce AND cs <= ve
-         ORDER BY v.user_id, view_id, click_id""",
+         ORDER BY v.user_id, view_id, click_id"""),
 
     // X118: cluster-balanced sample — one Lloyd round, then exactly 25
     // per cluster by md5 hash rank (the q88 strata convention)
-    "q134_cluster_sample" -> kmeansOracle(rounds = 1,
+    QueryDef("q134_cluster_sample", CorpusQueries.clusterBalancedSample(_, _), kmeansOracle(rounds = 1,
       finalSelect = s"""SELECT centroid_id, vec_id, rnk FROM
            (SELECT centroid_id, vec_id, row_number() OVER
               (PARTITION BY centroid_id
                ORDER BY ${md5h56("vec_id::VARCHAR")}, vec_id) AS rnk
             FROM fin)
-         WHERE rnk <= 25 ORDER BY centroid_id, rnk"""),
+         WHERE rnk <= 25 ORDER BY centroid_id, rnk""")),
 
     // X119: curriculum interleave — per-source quality rank, then the
     // (rnk, source) walk; position replayed as a global row_number
     // (the engine side uses contiguousIds, not a partitionless window)
-    "q135_curriculum" ->
+    QueryDef("q135_curriculum", CorpusQueries.curriculumSchedule(_, _),
       s"""WITH s AS (SELECT doc_id, source, $qualityExpr AS q FROM documents),
          r AS (SELECT doc_id, source,
                  row_number() OVER (PARTITION BY source
@@ -2053,14 +2063,14 @@ object CorpusOracles {
                FROM s)
          SELECT row_number() OVER (ORDER BY rnk, source, doc_id) - 1 AS position,
                 doc_id, source, rnk
-         FROM r ORDER BY position""",
+         FROM r ORDER BY position"""),
 
     // X120: top principal direction by power iteration — the q86
     // fixed-point Gram cells, then 8 unrolled iterations whose
     // matrix-vector products and norms are ORDERED list_sum folds (the
     // exact fold order the engine's driver loop uses), then the
     // projection via the shared dot kernel
-    "q136_pc1_projection" -> {
+    QueryDef("q136_pc1_projection", CorpusQueries.pc1Projection(_, _), {
       def iter(k: Int): String =
         s"""u$k AS (SELECT i, list_sum(list_transform(range(1, 65),
                 j -> gr[j] * vv.v[j])) AS u
@@ -2087,11 +2097,11 @@ object CorpusOracles {
          SELECT e.vec_id, list_sum(list_transform(range(1, 65),
                   i -> e.v[i]::DOUBLE * vv.v[i])) AS pc1_score
          FROM e, v8 vv ORDER BY e.vec_id"""
-    },
+    }),
 
     // X121: Merkle corpus manifest — q28 fingerprints, md5 over the
     // SORTED member digests per shard, root over sorted shard digests
-    "q137_corpus_manifest" ->
+    QueryDef("q137_corpus_manifest", CorpusQueries.corpusManifest(_, _),
       s"""WITH f AS (SELECT (${md5h56("doc_id::VARCHAR")}) % 64 AS shard,
                  md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
                FROM documents),
@@ -2102,12 +2112,12 @@ object CorpusOracles {
                  (SELECT sum(n_docs) FROM s)::BIGINT AS n_docs,
                  md5(string_agg(shard_hash, '' ORDER BY shard)) AS shard_hash
                FROM s)
-         SELECT * FROM s UNION ALL SELECT * FROM r ORDER BY shard""",
+         SELECT * FROM s UNION ALL SELECT * FROM r ORDER BY shard"""),
 
     // X122: quality-vs-length Pareto frontier — NOT EXISTS dominance
     // (identical points keep each other; the engine's local-frontier
     // merge must produce the same SET)
-    "q138_pareto" ->
+    QueryDef("q138_pareto", CorpusQueries.paretoFrontier(_, _),
       s"""WITH s AS MATERIALIZED (SELECT doc_id, $qualityExpr AS quality,
                  $tokenCount::BIGINT AS n_tokens
                FROM documents)
@@ -2115,11 +2125,11 @@ object CorpusOracles {
          WHERE NOT EXISTS (SELECT 1 FROM s b
            WHERE b.quality >= a.quality AND b.n_tokens <= a.n_tokens
              AND (b.quality > a.quality OR b.n_tokens < a.n_tokens))
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
 
     // X123: triangles + clustering coefficients on the mutual-5-NN
     // graph — wedge join + closing-edge join, each triangle a<b<c once
-    "q139_knn_triangles" ->
+    QueryDef("q139_knn_triangles", CorpusQueries.knnTriangles(_, _),
       s"""WITH $mutual5Ctes,
          eo AS MATERIALIZED (SELECT vec_a AS lo, vec_b AS hi FROM e),
          w AS (SELECT x.lo AS a, x.hi AS b, y.hi AS c
@@ -2134,11 +2144,11 @@ object CorpusOracles {
                   coalesce(n_triangles, 0)::DOUBLE * 2.0 /
                     (degree * (degree - 1))::DOUBLE
                 ELSE 0.0 END AS clustering_coeff
-         FROM dg LEFT JOIN pn USING (vec_id) ORDER BY dg.vec_id""",
+         FROM dg LEFT JOIN pn USING (vec_id) ORDER BY dg.vec_id"""),
 
     // X124: half-life-decayed counts — exact 2^-h weights ((1<<h)
     // shifts, never libm pow/exp), ordered fold over the ≤53 buckets
-    "q140_decayed_counts" ->
+    QueryDef("q140_decayed_counts", CorpusQueries.decayedCounts(_, _),
       """WITH pd AS (SELECT event_type AS k,
                  epoch_us(ts) // 86400000000 AS d, count(*) AS c
                FROM events GROUP BY 1, 2),
@@ -2148,12 +2158,12 @@ object CorpusOracles {
          SELECT k AS event_type, sum(cnt)::BIGINT AS n_events,
                 list_sum(list(cnt::DOUBLE / (1::BIGINT << hl)::DOUBLE
                     ORDER BY hl) FILTER (WHERE hl <= 52)) AS decayed_count
-         FROM hb GROUP BY k ORDER BY event_type""",
+         FROM hb GROUP BY k ORDER BY event_type"""),
 
     // X125: shard-level manifest diff vs a deterministically tampered
     // copy (1/97 edited, 1/89 dropped) — two q137 manifests full-outer
     // joined on shard
-    "q141_manifest_diff" -> {
+    QueryDef("q141_manifest_diff", CorpusQueries.manifestDiff(_, _), {
       def man(src: String, out: String) =
         s"""f$out AS (SELECT (${md5h56("doc_id::VARCHAR")}) % 64 AS shard,
                  md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
@@ -2180,11 +2190,11 @@ object CorpusOracles {
                 ma.n_docs AS n_docs_a, mb.n_docs AS n_docs_b
          FROM ma FULL OUTER JOIN mb ON ma.shard = mb.shard
          ORDER BY shard"""
-    },
+    }),
 
     // X126: KMV join preflight — bottom-256 order statistics, the q85
     // estimator, inclusion-exclusion intersection over the merged sketch
-    "q142_join_preflight" -> {
+    QueryDef("q142_join_preflight", CorpusQueries.joinPreflight(_, _), {
       def side(src: String, key: String, out: String) =
         s"""h$out AS (SELECT DISTINCT ${md5h56(s"$key::VARCHAR")} AS h FROM $src),
            r$out AS (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM h$out),
@@ -2219,13 +2229,13 @@ object CorpusOracles {
                     nd_intersect::DOUBLE) <=
                   0.35 * greatest(nd_intersect::DOUBLE, 1.0) AS est_ok
          FROM e"""
-    },
+    }),
 
     // X128: per-source boilerplate strip — 2-token chunks with
     // within-source doc-frequency ≥ max(2, ceil(10% of the source's
     // docs)) excised from every doc of the source (no keeper);
     // integer threshold arithmetic mirrors the Spark side exactly
-    "q143_boilerplate" ->
+    QueryDef("q143_boilerplate", CorpusQueries.boilerplateStrip(_, _),
       """WITH w AS (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
          ch AS (SELECT doc_id, source, unnest(range(0, ((len(w) + 1) // 2))) AS idx, w
                 FROM w),
@@ -2245,23 +2255,23 @@ object CorpusOracles {
          SELECT doc_id, any_value(source) AS source, count(*) AS n_chunks,
                 count(*) FILTER (is_b) AS n_boiler,
                 string_agg(chunk, ' ' ORDER BY idx) FILTER (NOT is_b) AS new_text
-         FROM m GROUP BY doc_id ORDER BY doc_id""",
+         FROM m GROUP BY doc_id ORDER BY doc_id"""),
 
     // X129: φ=1/64 heavy hitters — the Spark side runs Misra–Gries
     // prefilter + broadcast recount, but its OUTPUT is exact, so the
     // twin is the plain definition (GROUP BY + integer HAVING)
-    "q144_heavy_hitters" ->
+    QueryDef("q144_heavy_hitters", CorpusQueries.heavyHitters(_, _),
       """WITH t AS (SELECT unnest(string_split(text, ' ')) AS item FROM documents),
          n AS (SELECT count(*) AS n_total FROM t),
          c AS (SELECT item, count(*) AS cnt FROM t GROUP BY 1)
          SELECT item, cnt, n_total FROM c CROSS JOIN n
-         WHERE cnt * 64 > n_total ORDER BY cnt DESC, item""",
+         WHERE cnt * 64 > n_total ORDER BY cnt DESC, item"""),
 
     // X130: HITS token authorities — 4 unrolled fixed-point rounds,
     // multiply-free max-normalization `s // (m // SCALE)` (the Spark
     // side's exact arithmetic; CASTs pin DuckDB's HUGEINT sums back to
     // the BIGINT lattice Spark computes on)
-    "q145_token_hits" -> {
+    QueryDef("q145_token_hits", CorpusQueries.docTokenHits(_, _), {
       val S = 1000000000000L
       def aRound(i: Int, hubSrc: String) =
         s"""a${i}r AS (SELECT dst, CAST(sum(score) AS BIGINT) AS s
@@ -2283,11 +2293,11 @@ object CorpusOracles {
          $rounds
          SELECT dst AS token, score AS auth_scaled FROM a4
          ORDER BY auth_scaled DESC, token"""
-    },
+    }),
 
     // X131: RRF fusion of the full and 16-dim matryoshka cosine top-10
     // rankings — Σ 1000000 // (60+rank), exact integer, top-5 per query
-    "q146_rrf_fusion" ->
+    QueryDef("q146_rrf_fusion", CorpusQueries.rrfFusion(_, _),
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
               WHERE vec_id < 10),
          c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 10),
@@ -2315,12 +2325,12 @@ object CorpusOracles {
          r AS (SELECT u.*, row_number() OVER (PARTITION BY query_id
                  ORDER BY rrf_scaled DESC, vec_id) AS rnk FROM u)
          SELECT query_id, vec_id, rrf_scaled, in_full, in_trunc, rnk
-         FROM r WHERE rnk <= 5 ORDER BY query_id, rnk""",
+         FROM r WHERE rnk <= 5 ORDER BY query_id, rnk"""),
 
     // X132: simplified (centroid-based) silhouette over the X111
     // k-means clustering — per-vector s floor-scales to a long BEFORE
     // the per-cluster mean (exact integer sum, reduction-order-free)
-    "q147_silhouette" -> kmeansOracle(rounds = 2,
+    QueryDef("q147_silhouette", CorpusQueries.kmeansSilhouette(_, _), kmeansOracle(rounds = 2,
       s"""SELECT centroid_id, count(*) AS n,
             (sum(s_scaled)::DOUBLE / 1000000000.0) / count(*)::DOUBLE AS sil_avg
           FROM (
@@ -2339,12 +2349,12 @@ object CorpusOracles {
                       AS rn
                   FROM embeddings e CROSS JOIN c2 c)
             WHERE rn <= 2 GROUP BY vec_id)
-          GROUP BY centroid_id ORDER BY centroid_id"""),
+          GROUP BY centroid_id ORDER BY centroid_id""")),
 
     // X133: URL canonicalization over deterministically synthesized
     // messy URLs — every rule an explicit regex shared verbatim with
     // the Spark expressions
-    "q148_url_canonical" ->
+    QueryDef("q148_url_canonical", CorpusQueries.urlCanonical(_, _),
       """WITH u AS (SELECT doc_id,
              (CASE WHEN doc_id % 2 = 0 THEN 'https' ELSE 'HTTPS' END) || '://' ||
              (CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END) ||
@@ -2373,12 +2383,12 @@ object CorpusOracles {
                 'https://' || host || path ||
                 (CASE WHEN len(qs) > 0 THEN '?' || qs ELSE '' END)
                   AS canonical_url
-         FROM p ORDER BY doc_id""",
+         FROM p ORDER BY doc_id"""),
 
     // X134: trailing-7-observed-days anomaly z-scores — exact long
     // window sums, then the identical double chain (sqrt is correctly
     // rounded in IEEE, so both engines agree)
-    "q149_daily_anomaly" ->
+    QueryDef("q149_daily_anomaly", CorpusQueries.dailyAnomaly(_, _),
       """WITH d AS (SELECT event_type, date_trunc('day', ts)::DATE AS day,
                 count(*) AS n
               FROM events GROUP BY 1, 2),
@@ -2402,12 +2412,12 @@ object CorpusOracles {
                               sqrt((CAST(ss AS DOUBLE) -
                                     CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / 7.0) / 7.0)
                          ELSE 0.0 END) > 2.0 AS is_anomaly
-         FROM w WHERE c = 7 ORDER BY event_type, day""",
+         FROM w WHERE c = 7 ORDER BY event_type, day"""),
 
     // X136: blocked fuzzy linkage — same digit-slice/length-band
     // blocking, textbook Levenshtein verify (both engines agree on the
     // exact distances)
-    "q150_fuzzy_linkage" ->
+    QueryDef("q150_fuzzy_linkage", CorpusQueries.fuzzyLinkage(_, _),
       """WITH a AS (SELECT c_custkey AS id, c_name AS name FROM customer),
          b AS (SELECT c_custkey + 1000000 AS id,
                  CASE WHEN c_custkey % 3 = 0
@@ -2424,11 +2434,11 @@ object CorpusOracles {
                   ON substr(a.name, 14, 4) = substr(b.name, 14, 4)
                  AND length(a.name) // 4 = length(b.name) // 4)
          SELECT a_id, b_id, a_name, b_name, dist FROM ab
-         WHERE dist <= 1 ORDER BY a_id, b_id""",
+         WHERE dist <= 1 ORDER BY a_id, b_id"""),
 
     // X137: session-scoped co-visitation — q42's session CTE, distinct
     // per-session item sets, a<b pairs, exact-ratio lift (X97 trick)
-    "q151_covisit" ->
+    QueryDef("q151_covisit", CorpusQueries.covisitPairs(_, _),
       """WITH l AS (SELECT user_id, ts, event_type,
                 lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev
               FROM events),
@@ -2455,12 +2465,12 @@ object CorpusOracles {
          FROM pc JOIN ic ca ON pc.item_a = ca.item
                  JOIN ic cb ON pc.item_b = cb.item
                  CROSS JOIN ns
-         ORDER BY lift DESC, item_a, item_b""",
+         ORDER BY lift DESC, item_a, item_b"""),
 
     // X138: trailing-7-day distinct via merged daily KMV bottom-k —
     // per-day bottom-256 hash sets, date-range window union, ranked
     // merge, X67 order-statistic estimate (exact when sub-k)
-    "q152_sliding_distinct" -> {
+    QueryDef("q152_sliding_distinct", CorpusQueries.slidingDistinct(_, _), {
       val h = md5h56("user_id::VARCHAR")
       s"""WITH e AS (SELECT date_trunc('day', ts)::DATE AS day, $h AS h
                      FROM events),
@@ -2486,13 +2496,13 @@ object CorpusOracles {
                 END AS est_distinct,
                 g.sz < 256 AS is_exact
          FROM g JOIN nd USING (day) ORDER BY g.day"""
-    },
+    }),
 
     // X139: calendar gap-fill with linear interpolation — per-column
     // conditional IGNORE-NULLS window edges (same frame + same guard
     // keeps the (day, n) neighbor pair consistent), exact-operand
     // interpolation arithmetic
-    "q153_gap_fill" ->
+    QueryDef("q153_gap_fill", CorpusQueries.gapFill(_, _),
       """WITH d0 AS (SELECT event_type, date_trunc('day', ts)::DATE AS day,
                 count(*) AS n
               FROM events GROUP BY 1, 2),
@@ -2524,11 +2534,11 @@ object CorpusOracles {
                           CAST((xn - pn) * (day - pd) AS DOUBLE) /
                           CAST(xd - pd AS DOUBLE) END AS n_filled,
                 n IS NULL AS is_interpolated
-         FROM w ORDER BY event_type, day""",
+         FROM w ORDER BY event_type, day"""),
 
     // X140: exact per-source two-sample KS — integer ECDF numerators,
     // one final double division
-    "q154_ks_drift" ->
+    QueryDef("q154_ks_drift", CorpusQueries.ksDrift(_, _),
       """WITH d AS (SELECT source AS k, n_chars::BIGINT AS v FROM documents),
          svc AS (SELECT k, v, count(*) AS c_sv FROM d GROUP BY 1, 2),
          ks AS (SELECT k, count(*) AS n_s FROM d GROUP BY 1),
@@ -2550,11 +2560,11 @@ object CorpusOracles {
                              (cum_v - cum_a) * n_s)) AS DOUBLE) /
                   CAST(min(n_s) * min(n_total - n_s) AS DOUBLE) AS ks
          FROM c CROSS JOIN t
-         GROUP BY k ORDER BY k""",
+         GROUP BY k ORDER BY k"""),
 
     // X141: consistent-hash rebalancing matrix — same 56-bit ring, same
     // vnode naming, successor-with-wraparound via FILTERed arg_min
-    "q155_consistent_hash" -> {
+    QueryDef("q155_consistent_hash", CorpusQueries.consistentRebalance(_, _), {
       def vn(n: Int, name: String) =
         s"""$name AS (SELECT s.s::BIGINT AS shard,
               ${md5h56("(s.s::VARCHAR || ':' || r.r::VARCHAR)")} AS pos
@@ -2573,11 +2583,11 @@ object CorpusOracles {
          SELECT shard_before, shard_after, count(*) AS n_keys
          FROM o8 JOIN o9 USING (doc_id)
          GROUP BY 1, 2 ORDER BY 1, 2"""
-    },
+    }),
 
     // X142: Benford first-digit audit — the nine expectations are the
     // same compile-time double literals the Spark side carries
-    "q156_benford" -> {
+    QueryDef("q156_benford", CorpusQueries.benfordAudit(_, _), {
       val benford = Seq(
         1 -> "0.3010299956639812", 2 -> "0.17609125905568124",
         3 -> "0.12493873660829993", 4 -> "0.09691001300805642",
@@ -2601,11 +2611,11 @@ object CorpusOracles {
                 (CAST(n AS DOUBLE) / CAST(n_total AS DOUBLE)) -
                   (CASE digit $cases END) AS dev
          FROM c CROSS JOIN t ORDER BY digit"""
-    },
+    }),
 
     // X143: keyed pseudonymization — same salt:key md5-integer hash,
     // join on pseudonyms only, top-10 by order count
-    "q157_pseudonymize" -> {
+    QueryDef("q157_pseudonymize", CorpusQueries.pseudonymize(_, _), {
       def pz(c: String) = md5h56(s"('graft-pz1:' || $c::VARCHAR)")
       s"""WITH cust AS (SELECT ${pz("c_custkey")} AS pid, c_mktsegment
                         FROM customer),
@@ -2614,11 +2624,11 @@ object CorpusOracles {
                 count(*) AS n_orders
          FROM cust JOIN ords ON cust.pid = ords.pid
          GROUP BY 1 ORDER BY n_orders DESC, cust.pid LIMIT 10"""
-    },
+    }),
 
     // X146: percentile-clipped int8 calibration — nearest-rank cuts in
     // integer rank arithmetic, identical clamp/round/scale chain
-    "q158_clipped_quantize" ->
+    QueryDef("q158_clipped_quantize", CorpusQueries.clippedQuantize(_, _),
       """WITH cells AS (SELECT t.i - 1 AS dim, embedding[t.i]::DOUBLE AS v
                         FROM embeddings, range(1, 65) t(i)),
          cnts AS (SELECT dim, v, count(*) AS c FROM cells GROUP BY 1, 2),
@@ -2639,11 +2649,11 @@ object CorpusOracles {
                 count(*) FILTER (v < lo) AS n_sat_lo,
                 count(*) FILTER (v > hi) AS n_sat_hi,
                 CAST(sum(qc) AS BIGINT) AS q_sum
-         FROM q GROUP BY dim ORDER BY dim""",
+         FROM q GROUP BY dim ORDER BY dim"""),
 
     // X147: stratified k-fold — round-robin in content-hash order per
     // source stratum; token count via the q69 whitespace formula
-    "q159_kfold" -> {
+    QueryDef("q159_kfold", CorpusQueries.kFold(_, _), {
       val h = md5h56("doc_id::VARCHAR")
       s"""WITH d AS (SELECT doc_id, source,
                 (length(text) - length(replace(text, ' ', '')) + 1) AS n_tok,
@@ -2657,11 +2667,11 @@ object CorpusOracles {
                 CAST(sum(n_tok) AS BIGINT) AS n_tokens,
                 min(doc_id) AS first_doc
          FROM f GROUP BY 1, 2 ORDER BY source, fold"""
-    },
+    }),
 
     // X148: Gini audit — sorted-rank identity, exact long sums, one
     // double division per metric
-    "q160_gini" -> {
+    QueryDef("q160_gini", CorpusQueries.giniAudit(_, _), {
       def g(src: String, label: String) =
         s"""SELECT '$label' AS metric, count(*) AS n,
               CAST(sum(x) AS BIGINT) AS total,
@@ -2681,11 +2691,11 @@ object CorpusOracles {
                  (SELECT unnest(string_split(text, ' ')) AS t FROM documents)
                 GROUP BY t""", "tokens_per_type")}
          ORDER BY metric"""
-    },
+    }),
 
     // X149: winsorized group means — nearest-rank [p5,p95] cuts on
     // cents integers, clamp, exact long sum, one division
-    "q161_winsorized" ->
+    QueryDef("q161_winsorized", CorpusQueries.winsorized(_, _),
       """WITH li AS (SELECT l_returnflag AS flag,
                 CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
               FROM lineitem),
@@ -2705,12 +2715,12 @@ object CorpusOracles {
                 CAST(sum(least(greatest(cents, lo), hi)) AS DOUBLE) / 100.0 /
                   CAST(min(cuts.n) AS DOUBLE) AS winsorized_mean
          FROM li JOIN cuts ON li.flag = cuts.flag
-         GROUP BY li.flag ORDER BY li.flag""",
+         GROUP BY li.flag ORDER BY li.flag"""),
 
     // X150: fixed-round 3-core peeling over the mutual-5-NN graph —
     // 5 unrolled degree/filter rounds (MATERIALIZED: each alive set
     // feeds two consumers)
-    "q162_kcore" -> {
+    QueryDef("q162_kcore", CorpusQueries.kcorePeel(_, _), {
       def round(i: Int) =
         s"""d$i AS MATERIALIZED (SELECT b.src AS vec_id, count(*) AS deg
               FROM bid b JOIN a${i - 1} s ON b.src = s.vec_id
@@ -2739,12 +2749,12 @@ object CorpusOracles {
          FROM embeddings n LEFT JOIN rem ON n.vec_id = rem.vec_id
                            LEFT JOIN fd ON n.vec_id = fd.vec_id
          ORDER BY n.vec_id"""
-    },
+    }),
 
     // X209: fixed-round k-truss peel — per round: oriented-wedge
     // triangles, 3-role edge-support counts, support >= k-2 survival;
     // survivors' final support recounted on the closing edge set
-    "q218_ktruss" -> {
+    QueryDef("q218_ktruss", CorpusQueries.ktrussPeel(_, _), {
       def round(i: Int) =
         s"""tri$i AS MATERIALIZED (SELECT x.vec_a AS a, x.vec_b AS b, y.vec_b AS c
               FROM te${i - 1} x JOIN te${i - 1} y
@@ -2780,10 +2790,10 @@ object CorpusOracles {
          LEFT JOIN trem ON e.vec_a = trem.vec_a AND e.vec_b = trem.vec_b
          LEFT JOIN fsup ON e.vec_a = fsup.vec_a AND e.vec_b = fsup.vec_b
          ORDER BY e.vec_a, e.vec_b"""
-    },
+    }),
 
     // X151: langid eval — shared prediction CTEs, harmonic-identity F1
-    "q163_langid_eval" ->
+    QueryDef("q163_langid_eval", CorpusQueries.langIdEval(_, _),
       s"""WITH $langPredCtes,
          j AS (SELECT d.lang, p.lang_pred FROM documents d
                JOIN pred p ON d.doc_id = p.doc_id),
@@ -2805,12 +2815,12 @@ object CorpusOracles {
                      THEN 2.0 * coalesce(tp.tp, 0)::DOUBLE /
                           (m.n_true + m.n_pred)::DOUBLE
                 END AS f1
-         FROM m LEFT JOIN tp ON m.cls = tp.cls ORDER BY m.cls""",
+         FROM m LEFT JOIN tp ON m.cls = tp.cls ORDER BY m.cls"""),
 
     // X212: l-diversity + integer-exact t-closeness (categorical TVD by
     // rational cross-multiplication) over the complete nation×segment
     // grid — missing segments contribute |0 − c_alls·n_g|
-    "q219_privacy_census" ->
+    QueryDef("q219_privacy_census", CorpusQueries.privacyCensus(_, _),
       """WITH cell AS (SELECT c_nationkey AS nation, c_mktsegment AS seg,
                 count(*)::BIGINT AS cg
               FROM customer GROUP BY 1, 2),
@@ -2834,16 +2844,16 @@ object CorpusOracles {
                 (num * 1000000 // (2 * n * n_all))::BIGINT AS tvd_ppm,
                 l_distinct >= 3 AS l_ok,
                 (num * 1000000 // (2 * n * n_all)) <= 200000 AS t_ok
-         FROM agg ORDER BY nation""",
+         FROM agg ORDER BY nation"""),
 
     // X152: k-anonymity equivalence classes over (segment, nation)
-    "q164_k_anonymity" ->
+    QueryDef("q164_k_anonymity", CorpusQueries.kAnonymity(_, _),
       """SELECT c_mktsegment AS segment, c_nationkey AS nation,
                 count(*) AS n, count(*) >= 5 AS k_anon_ok
-         FROM customer GROUP BY 1, 2 ORDER BY segment, nation""",
+         FROM customer GROUP BY 1, 2 ORDER BY segment, nation"""),
 
     // X153: relational data-contract audit — one verdict row per rule
-    "q165_data_contract" ->
+    QueryDef("q165_data_contract", CorpusQueries.dataContract(_, _),
       """SELECT rule, n_violations, n_violations = 0 AS ok FROM (
          SELECT 'customer_null_segment' AS rule,
                 (SELECT count(*) FROM customer WHERE c_mktsegment IS NULL)
@@ -2863,11 +2873,11 @@ object CorpusOracles {
          SELECT 'orders_status_domain',
                 (SELECT count(*) FROM orders
                  WHERE o_orderstatus NOT IN ('O', 'F', 'P'))
-         ) ORDER BY rule""",
+         ) ORDER BY rule"""),
 
     // X154: CDC net-effect compaction — first/last ops via asc/desc
     // row_number (the Spark side's min_by/max_by over (ts, seq))
-    "q166_cdc_compact" ->
+    QueryDef("q166_cdc_compact", CorpusQueries.cdcCompact(_, _),
       """WITH l AS (SELECT user_id,
                 CASE event_type WHEN 'signup' THEN 'I'
                                 WHEN 'error' THEN 'D' ELSE 'U' END AS op,
@@ -2894,11 +2904,11 @@ object CorpusOracles {
                  n_changes
                FROM f)
          SELECT user_id, net_op, last_value, n_changes FROM o
-         WHERE net_op <> 'absent' ORDER BY user_id""",
+         WHERE net_op <> 'absent' ORDER BY user_id"""),
 
     // X155: per-label centroid drift — X106 fixed-point means per
     // (label, half, dim), list-assembled in dim order, shared cosine
-    "q167_centroid_drift" -> {
+    QueryDef("q167_centroid_drift", CorpusQueries.centroidDrift(_, _), {
       val h = md5h56("vec_id::VARCHAR")
       s"""WITH cells AS (SELECT label, ($h) % 2 AS half, vec_id,
                 t.i - 1 AS dim,
@@ -2916,11 +2926,11 @@ object CorpusOracles {
                 ${cosine("a.cv", "b.cv")} AS centroid_cos
          FROM c a JOIN c b ON a.label = b.label
          WHERE a.half = 0 AND b.half = 1 ORDER BY a.label"""
-    },
+    }),
 
     // X156: bigram-type growth at hash-ordered 25/50/100% prefixes —
     // one (source, bigram) agg with a min-prefix-level fold
-    "q168_vocab_growth" -> {
+    QueryDef("q168_vocab_growth", CorpusQueries.vocabGrowth(_, _), {
       val h = md5h56("doc_id::VARCHAR")
       s"""WITH d AS (SELECT doc_id, source, text, $h AS h FROM documents),
          r AS (SELECT *, row_number() OVER (PARTITION BY source
@@ -2944,11 +2954,11 @@ object CorpusOracles {
                 count(*) AS types_100
          FROM m JOIN n ON m.source = n.source
          GROUP BY 1, 2 ORDER BY m.source"""
-    },
+    }),
 
     // X158: span-corruption stats — same per-position hash mask, same
     // gaps-and-islands span fold, exact-integer report
-    "q170_span_corruption" -> {
+    QueryDef("q170_span_corruption", CorpusQueries.spanCorruption(_, _), {
       val h = md5h56("(doc_id::VARCHAR || ':' || pos::VARCHAR)")
       s"""WITH t AS (SELECT doc_id,
                 unnest(range(0, len(string_split(text, ' ')))) AS pos
@@ -2971,11 +2981,11 @@ object CorpusOracles {
                   AS span_len_milli
          FROM nt LEFT JOIN sp ON nt.doc_id = sp.doc_id
          ORDER BY nt.doc_id"""
-    },
+    }),
 
     // X159: trending movers — two X124 shift-fold scores (half-life 2
     // vs 14), deterministic ranks, integer delta
-    "q171_trending_movers" -> {
+    QueryDef("q171_trending_movers", CorpusQueries.trendingMovers(_, _), {
       def sc(hl: Int, out: String) =
         s"""hb$out AS (SELECT k, (maxd - d) // $hl AS hl, sum(c)::BIGINT AS cnt
               FROM pd, st GROUP BY 1, 2),
@@ -2995,11 +3005,11 @@ object CorpusOracles {
                 rs.r - rf.r AS rank_delta
          FROM rf JOIN rs ON rf.k = rs.k
          ORDER BY rank_delta DESC, user_id"""
-    },
+    }),
 
     // X160: stable incremental vocab ids — existing keep dense-rank
     // ids, new terms extend past max_id
-    "q172_vocab_ids" ->
+    QueryDef("q172_vocab_ids", CorpusQueries.vocabStableIds(_, _),
       """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
                     FROM documents),
          ex AS (SELECT DISTINCT term FROM t WHERE doc_id % 2 = 0),
@@ -3013,11 +3023,11 @@ object CorpusOracles {
          SELECT term, id, FALSE AS is_new FROM exi
          UNION ALL
          SELECT term, mx + rk AS id, TRUE AS is_new FROM nwi, mx
-         ORDER BY id""",
+         ORDER BY id"""),
 
     // X162: hash-sampled AQP audit — deterministic 1% sample, exact
     // integer sums both paths, one double division for the verdict
-    "q173_sample_aqp" -> {
+    QueryDef("q173_sample_aqp", CorpusQueries.sampleAqp(_, _), {
       val h = md5h56("(l_orderkey::VARCHAR || ':' || l_linenumber::VARCHAR)")
       s"""WITH li AS (SELECT l_returnflag AS flag,
                 CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
@@ -3032,11 +3042,11 @@ object CorpusOracles {
                 abs(CAST(sp.samp_cents * 100 - ex.exact_cents AS DOUBLE)) /
                   CAST(ex.exact_cents AS DOUBLE) <= 0.15 AS est_ok
          FROM ex JOIN sp ON ex.flag = sp.flag ORDER BY ex.flag"""
-    },
+    }),
 
     // X163: ALS half-step — ordered list_sum folds mirror Spark's
     // sorted aggregate folds; all constants binary-exact (powers of 2)
-    "q174_als_step" -> {
+    QueryDef("q174_als_step", CorpusQueries.alsHalfStep(_, _), {
       val h = md5h56("item")
       s"""WITH r AS (SELECT user_id, event_type AS item,
                 count(*)::DOUBLE AS v
@@ -3060,11 +3070,11 @@ object CorpusOracles {
                   ((s11 + 0.125::DOUBLE) * (s22 + 0.125::DOUBLE) - s12 * s12)
                   AS f2
          FROM eq ORDER BY user_id"""
-    },
+    }),
 
     // X164: first/last-touch attribution — conditional IGNORE-NULLS
     // window edges in (ts, event_id) order, 'direct' fallback
-    "q175_attribution" ->
+    QueryDef("q175_attribution", CorpusQueries.attribution(_, _),
       """WITH t AS (SELECT user_id, ts, event_id, event_type,
                  coalesce(first_value(CASE WHEN event_type <> 'purchase'
                      THEN event_type END IGNORE NULLS) OVER w, 'direct')
@@ -3085,11 +3095,11 @@ object CorpusOracles {
                 coalesce(n_first_touch, 0) AS n_first_touch,
                 coalesce(n_last_touch, 0) AS n_last_touch
          FROM f FULL OUTER JOIN l ON f.touch = l.touch
-         ORDER BY touch""",
+         ORDER BY touch"""),
 
     // X165: ALS alternation — user factors (the q174 CTE chain), then
     // the symmetric item-side solve with folds ordered by user
-    "q176_als_alternation" -> {
+    QueryDef("q176_als_alternation", CorpusQueries.alsAlternation(_, _), {
       val h = md5h56("item")
       s"""WITH r AS (SELECT user_id, event_type AS item,
                 count(*)::DOUBLE AS v
@@ -3130,11 +3140,11 @@ object CorpusOracles {
                   ((s11 + 0.125::DOUBLE) * (s22 + 0.125::DOUBLE) - s12 * s12)
                   AS g2
          FROM ie ORDER BY item"""
-    },
+    }),
 
     // X166: RANGE-frame rolling hour — integer-seconds order column,
     // [−3600, −1] strict-trailing bound, exact long frame arithmetic
-    "q177_rolling_range" ->
+    QueryDef("q177_rolling_range", CorpusQueries.rollingRange(_, _),
       """WITH e AS (SELECT user_id, event_id,
                 epoch_us(ts) // 1000000 AS sec,
                 CAST(round(value * 100) AS BIGINT) AS cents
@@ -3145,11 +3155,11 @@ object CorpusOracles {
          FROM e
          WINDOW w AS (PARTITION BY user_id ORDER BY sec
                       RANGE BETWEEN 3600 PRECEDING AND 1 PRECEDING)
-         ORDER BY user_id, event_id""",
+         ORDER BY user_id, event_id"""),
 
     // X167: nested-record export — canonical ln:qty:cents|... encoding
     // in line-number order
-    "q178_nest_export" ->
+    QueryDef("q178_nest_export", CorpusQueries.nestExport(_, _),
       """WITH l AS (SELECT l_orderkey, l_linenumber,
                 CAST(round(l_quantity) AS BIGINT) AS qty,
                 CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
@@ -3163,10 +3173,10 @@ object CorpusOracles {
          SELECT o.o_orderkey, o.o_custkey, n.n_lines, n.total_cents,
                 n.lines_doc
          FROM orders o JOIN n ON o.o_orderkey = n.l_orderkey
-         ORDER BY o.o_orderkey""",
+         ORDER BY o.o_orderkey"""),
 
     // X168: top-5 + '(other)' rollup — exact heads, tail collapsed
-    "q179_topk_other" ->
+    QueryDef("q179_topk_other", CorpusQueries.topkOther(_, _),
       """WITH c AS (SELECT unnest(string_split(text, ' ')) AS token
                     FROM documents),
          cnt AS (SELECT token, count(*) AS n FROM c GROUP BY 1),
@@ -3175,13 +3185,13 @@ object CorpusOracles {
          UNION ALL
          SELECT '(other)', CAST(sum(n) AS BIGINT), TRUE FROM cnt
          WHERE token NOT IN (SELECT token FROM top)
-         ORDER BY n DESC, token""",
+         ORDER BY n DESC, token"""),
 
     // X171: EXACT duplicate-substring excision — stride-1 8-gram
     // coverage union with keep-first retention (rk 1 per fingerprint
     // survives); mirrors the q102 skeleton but with per-occurrence
     // keeper ranking instead of all-occurrence flagging
-    "q181_substring_dedup" ->
+    QueryDef("q181_substring_dedup", CorpusQueries.substringDedupExact(_, _),
       """WITH b AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          g AS (SELECT doc_id, u.start AS start, u.fp AS fp FROM (
                  SELECT doc_id, unnest(list_transform(range(0, len(w) - 7),
@@ -3210,10 +3220,10 @@ object CorpusOracles {
          SELECT doc_id, n_tok, n_dup_grams, n_spans,
                 (n_tok - len(cw))::BIGINT AS n_removed,
                 md5(coalesce(array_to_string(cw, ' '), '')) AS clean_fp
-         FROM fin ORDER BY doc_id""",
+         FROM fin ORDER BY doc_id"""),
 
     // X172: one-pass ROLLUP grouping sets, sentinel-coalesced levels
-    "q182_rollup" ->
+    QueryDef("q182_rollup", StarQueries.q182Rollup(_, _),
       """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
                 coalesce(l_linestatus, 'ALL') AS linestatus,
                 CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
@@ -3221,30 +3231,30 @@ object CorpusOracles {
                 count(*) AS n
          FROM lineitem
          GROUP BY ROLLUP(l_returnflag, l_linestatus)
-         ORDER BY returnflag, linestatus""",
+         ORDER BY returnflag, linestatus"""),
 
     // X173: declared-domain pivot = 5 conditional counts in one agg
-    "q183_pivot" ->
+    QueryDef("q183_pivot", StarQueries.q183Pivot(_, _),
       """SELECT user_id % 8 AS segment,
                 count(*) FILTER (WHERE event_type = 'click') AS click,
                 count(*) FILTER (WHERE event_type = 'error') AS error,
                 count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
                 count(*) FILTER (WHERE event_type = 'signup') AS signup,
                 count(*) FILTER (WHERE event_type = 'view') AS view
-         FROM events GROUP BY 1 ORDER BY 1""",
+         FROM events GROUP BY 1 ORDER BY 1"""),
 
     // X174: JSON path extraction fused into the scan projection
-    "q184_json_props" ->
+    QueryDef("q184_json_props", StarQueries.q184JsonProps(_, _),
       """SELECT event_type, count(*) AS n,
                 min(json_extract(props, '$.k')::BIGINT) AS k_min,
                 max(json_extract(props, '$.k')::BIGINT) AS k_max,
                 CAST(sum(json_extract(props, '$.k')::BIGINT) AS BIGINT) AS k_sum
          FROM events
          WHERE json_extract(props, '$.k')::BIGINT IS NOT NULL
-         GROUP BY 1 ORDER BY 1""",
+         GROUP BY 1 ORDER BY 1"""),
 
     // X175: ntile / percent_rank / cume_dist over a unique order
-    "q185_window_suite" ->
+    QueryDef("q185_window_suite", StarQueries.q185WindowSuite(_, _),
       """SELECT s_nationkey, s_suppkey,
                 CAST(round(s_acctbal * 100) AS BIGINT) AS bal,
                 CAST(ntile(4) OVER w AS BIGINT) AS quartile,
@@ -3253,11 +3263,11 @@ object CorpusOracles {
          FROM supplier
          WINDOW w AS (PARTITION BY s_nationkey
                       ORDER BY CAST(round(s_acctbal * 100) AS BIGINT), s_suppkey)
-         ORDER BY s_nationkey, s_suppkey""",
+         ORDER BY s_nationkey, s_suppkey"""),
 
     // X181: hash-ordered greedy token budget on REAL byte-BPE subword
     // counts (q69's cut driven by the trained tokenizer)
-    "q191_bpe_budget" ->
+    QueryDef("q191_bpe_budget", CorpusQueries.bpeBudget(_, _),
       s"""WITH $bpeTrainingCtes,
          lut AS (SELECT array_to_string(syms, '') AS hword,
                    len(syms)::BIGINT AS n_sub FROM w5),
@@ -3274,10 +3284,10 @@ object CorpusOracles {
          SELECT source, count(*) AS n_docs_kept,
                 CAST(sum(n_tok) AS BIGINT) AS subtok_kept,
                 max(cum) AS subtok_cum_at_cut
-         FROM c WHERE cum - n_tok < 2048 GROUP BY source ORDER BY source""",
+         FROM c WHERE cum - n_tok < 2048 GROUP BY source ORDER BY source"""),
 
     // X180: TPC-H Q5-shape 6-table star join, decimal-exact revenue
-    "q190_star_join" ->
+    QueryDef("q190_star_join", StarQueries.q190StarJoin(_, _),
       """SELECT n_name,
                 CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
                          (CAST(1 AS DECIMAL(18,2)) -
@@ -3294,11 +3304,11 @@ object CorpusOracles {
          WHERE r_name = 'ASIA'
            AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
            AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-         GROUP BY 1 ORDER BY revenue DESC, n_name""",
+         GROUP BY 1 ORDER BY revenue DESC, n_name"""),
 
     // X176: idf-weighted Jaccard — exact integer weights scale DIV df,
     // all-pairs twin over the shared-shingle join
-    "q189_weighted_jaccard" ->
+    QueryDef("q189_weighted_jaccard", CorpusQueries.weightedJaccard(_, _),
       s"""WITH ${shingleCteN(3)},
          shh AS (SELECT doc_id, ${md5h56("shingle")} & ${(1L << 55) - 1} AS h
                  FROM sh),
@@ -3315,10 +3325,10 @@ object CorpusOracles {
          FROM p JOIN tw ta ON doc_a = ta.doc_id
                 JOIN tw tb ON doc_b = tb.doc_id
          WHERE cw::DOUBLE / (ta.tw + tb.tw - cw)::DOUBLE >= 0.5
-         ORDER BY doc_a, doc_b""",
+         ORDER BY doc_a, doc_b"""),
 
     // X177: equi-width histogram, exact integer bucketing
-    "q186_equiwidth_hist" ->
+    QueryDef("q186_equiwidth_hist", StarQueries.q186EquiwidthHist(_, _),
       """WITH li AS (SELECT l_returnflag,
                        CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
                      FROM lineitem),
@@ -3328,10 +3338,10 @@ object CorpusOracles {
                 ((cents - mn) * 8) // (mx - mn + 1) AS bucket,
                 count(*) AS n, min(cents) AS lo, max(cents) AS hi
          FROM li JOIN st USING (l_returnflag)
-         GROUP BY 1, 2 ORDER BY 1, 2""",
+         GROUP BY 1, 2 ORDER BY 1, 2"""),
 
     // X178: unpivot(pivot) round-trip — 0-count combos INCLUDED
-    "q187_unpivot" ->
+    QueryDef("q187_unpivot", StarQueries.q187Unpivot(_, _),
       """WITH seg AS (SELECT DISTINCT user_id % 8 AS segment FROM events),
          ty AS (SELECT unnest(['click','error','purchase','signup','view'])
                   AS event_type),
@@ -3340,24 +3350,24 @@ object CorpusOracles {
          SELECT seg.segment, ty.event_type, coalesce(c.n, 0) AS n
          FROM seg CROSS JOIN ty
          LEFT JOIN c ON c.segment = seg.segment AND c.event_type = ty.event_type
-         ORDER BY 1, 2""",
+         ORDER BY 1, 2"""),
 
     // X179: bool_and / bool_or / count_if aggregate suite
-    "q188_bool_aggs" ->
+    QueryDef("q188_bool_aggs", StarQueries.q188BoolAggs(_, _),
       """SELECT l_returnflag,
                 bool_and(l_quantity > 0) AS all_qty_pos,
                 bool_or(l_discount > 0.05) AS any_deep_discount,
                 count(*) FILTER (WHERE l_tax = 0) AS n_tax_free,
                 count(*) FILTER (WHERE l_quantity >= 25) AS n_bulk,
                 count(*) AS n
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
+         FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
     // X169: byte-level BPE trained on a SECOND corpus (part names, 8
     // rounds) — the generality row for the byte alphabet: merges are
     // UTF-8-byte hex sequences, sym_bytes is each symbol's REAL byte
     // width (len(hex)/2), and the twin replays all 8 rounds (see
     // bpeByteCtes)
-    "q180_bpe_byte_train" -> {
+    QueryDef("q180_bpe_byte_train", CorpusQueries.bpeByteTrainParts(_, _), {
       val ctes = bpeByteCtes(8,
         "SELECT unnest(string_split(p_name, ' ')) AS word FROM part")
       val mergeUnion = (1 to 8).map { i =>
@@ -3375,12 +3385,12 @@ object CorpusOracles {
                   FROM vocab ORDER BY f DESC, sym LIMIT 20)
          SELECT * FROM ($mergeUnion UNION ALL SELECT * FROM topv)
          ORDER BY kind, rnk"""
-    },
+    }),
 
     // X184: TPC-H Q21-shape — the oracle is the LITERAL fact self-join
     // with EXISTS/NOT-EXISTS; the engine's single-scan aggregate
     // rewrite must hash-match it (that equality is the rewrite proof)
-    "q193_waiting_supplier" ->
+    QueryDef("q193_waiting_supplier", StarQueries.q193WaitingSupplier(_, _),
       """SELECT s_name, count(*) AS numwait
          FROM supplier
          JOIN nation ON s_nationkey = n_nationkey AND n_name = 'NATION_3'
@@ -3396,11 +3406,11 @@ object CorpusOracles {
                          AND l3.l_returnflag = 'R')
          GROUP BY s_name
          ORDER BY numwait DESC, s_name
-         LIMIT 20""",
+         LIMIT 20"""),
 
     // X185: two fact paths (orders revenue, events engagement) joined
     // through the shared customer dim, decimal/cents-exact sums
-    "q194_two_fact_paths" ->
+    QueryDef("q194_two_fact_paths", StarQueries.q194TwoFactPaths(_, _),
       """WITH o AS (SELECT o_custkey, count(*) AS n_orders,
                 sum(CAST(o_totalprice AS DECIMAL(18,2))) AS order_rev
               FROM orders GROUP BY 1),
@@ -3421,14 +3431,14 @@ object CorpusOracles {
          LEFT JOIN o ON c_custkey = o_custkey
          LEFT JOIN e ON c_custkey = user_id
          JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY n_name ORDER BY n_name""",
+         GROUP BY n_name ORDER BY n_name"""),
 
     // X186: TPC-H Q17-shape — the oracle is the LITERAL correlated
     // scalar subquery; the engine's decorrelated per-part pre-agg join
     // must hash-match it (threshold compare can never flip: quantities
     // are integer-valued doubles, so sum is order-free exact and avg
     // is one identical division in both engines)
-    "q195_small_qty_revenue" ->
+    QueryDef("q195_small_qty_revenue", StarQueries.q195SmallQtyRevenue(_, _),
       """SELECT p_brand,
                 CAST(sum(CAST(l1.l_extendedprice AS DECIMAL(18,2)))
                   AS DOUBLE) / 7.0 AS avg_yearly,
@@ -3437,7 +3447,7 @@ object CorpusOracles {
          WHERE l1.l_quantity < (SELECT 0.2 * avg(l2.l_quantity)
                                 FROM lineitem l2
                                 WHERE l2.l_partkey = l1.l_partkey)
-         GROUP BY p_brand ORDER BY p_brand""",
+         GROUP BY p_brand ORDER BY p_brand"""),
 
     // X182: audio features through the real WAV codec — the twin never
     // sees a byte: the synthesized triangle wave's exact integer
@@ -3446,7 +3456,7 @@ object CorpusOracles {
     // integer division the synthesizer used (peak = max |s_i| since
     // the sign flip squares/abs away; n_bytes = 44-byte header + the
     // 12-byte LIST chunk every third doc carries + 2 bytes/sample)
-    "q192_audio_features" ->
+    QueryDef("q192_audio_features", CorpusQueries.audioFeatures(_, _),
       """WITH p AS (SELECT doc_id,
                 100 + doc_id % 157 AS n,
                 8000 + (doc_id % 4) * 4000 AS rate,
@@ -3469,14 +3479,14 @@ object CorpusOracles {
                 CAST(sum(v * v) AS BIGINT) AS sum_sq
          FROM p JOIN s USING (doc_id)
          GROUP BY p.doc_id, n, rate, extra
-         ORDER BY p.doc_id""",
+         ORDER BY p.doc_id"""),
 
     // X187: TPC-H Q2-shape — the oracle is the LITERAL correlated MIN
     // subquery over the derived part-supplier cost relation; the
     // engine's decorrelated per-part min-agg join must hash-match it
     // (cost is a MIN of identical doubles — no summation, equality
     // cannot flip between engines)
-    "q196_min_cost_supplier" ->
+    QueryDef("q196_min_cost_supplier", StarQueries.q196MinCostSupplier(_, _),
       """WITH ps AS (SELECT l_partkey, l_suppkey, min(l_extendedprice) AS cost
               FROM lineitem GROUP BY 1, 2),
          rsupp AS (SELECT s_suppkey, s_name
@@ -3491,13 +3501,13 @@ object CorpusOracles {
            AND cost = (SELECT min(ps2.cost) FROM ps ps2
                        JOIN rsupp r2 ON ps2.l_suppkey = r2.s_suppkey
                        WHERE ps2.l_partkey = ps.l_partkey)
-         ORDER BY p_partkey, s_name""",
+         ORDER BY p_partkey, s_name"""),
 
     // X188: TPC-H Q18-shape — the oracle is the LITERAL IN-subquery on
     // the HAVING-filtered aggregate; the engine's aggregate-once rewrite
     // (survivors drive the joins, fact never rejoined for the sum) must
     // hash-match it
-    "q197_large_qty_orders" ->
+    QueryDef("q197_large_qty_orders", StarQueries.q197LargeQtyOrders(_, _),
       """SELECT c_name, c_custkey, o_orderkey,
                 CAST(o_orderdate AS DATE) AS o_date,
                 o_totalprice, sum(l_quantity) AS total_qty
@@ -3507,12 +3517,12 @@ object CorpusOracles {
          WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
                               GROUP BY 1 HAVING sum(l_quantity) > 200)
          GROUP BY 1, 2, 3, 4, 5
-         ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""",
+         ORDER BY o_totalprice DESC, o_orderkey LIMIT 100"""),
 
     // X189: TPC-H Q22-shape — LITERAL scalar-AVG subquery + NOT EXISTS;
     // threshold on exact cents (one identical division) so a boundary
     // customer can never flip between engines
-    "q198_dormant_customers" ->
+    QueryDef("q198_dormant_customers", StarQueries.q198DormantCustomers(_, _),
       """SELECT n_name AS cntry, count(*) AS numcust,
                 CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
          FROM customer JOIN nation ON c_nationkey = n_nationkey
@@ -3523,13 +3533,13 @@ object CorpusOracles {
            AND NOT EXISTS (SELECT 1 FROM orders
                            WHERE o_custkey = c_custkey
                              AND o_orderdate >= DATE '1999-01-01')
-         GROUP BY 1 ORDER BY 1""",
+         GROUP BY 1 ORDER BY 1"""),
 
     // X190: TPC-H Q11-shape — LITERAL HAVING-with-scalar-subquery (two
     // logical fact reads); the engine derives the threshold from the
     // per-part agg itself. Exact-cents sums make the 1.25×mean
     // threshold one identical division + product in both engines
-    "q199_value_share" ->
+    QueryDef("q199_value_share", StarQueries.q199ValueShare(_, _),
       """SELECT l_partkey,
                 CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
                   AS value_cents
@@ -3538,12 +3548,12 @@ object CorpusOracles {
                 (SELECT 1.25 * (CAST(sum(v) AS DOUBLE) / count(*))
                  FROM (SELECT sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS v
                        FROM lineitem GROUP BY l_partkey))
-         ORDER BY value_cents DESC, l_partkey LIMIT 100""",
+         ORDER BY value_cents DESC, l_partkey LIMIT 100"""),
 
     // X191: TPC-H Q15-shape — LITERAL max-of-view scalar subquery;
     // DECIMAL(18,2) revenue (the q01 rule) makes max/equality exact so
     // the tie set is engine-stable
-    "q200_top_revenue_supplier" ->
+    QueryDef("q200_top_revenue_supplier", StarQueries.q200TopRevenueSupplier(_, _),
       """WITH rev AS (SELECT l_suppkey,
                 sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
                     (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
@@ -3555,13 +3565,13 @@ object CorpusOracles {
          SELECT s_suppkey, s_name, CAST(total_rev AS DOUBLE) AS total_revenue
          FROM supplier JOIN rev ON s_suppkey = l_suppkey
          WHERE total_rev = (SELECT max(total_rev) FROM rev)
-         ORDER BY s_suppkey""",
+         ORDER BY s_suppkey"""),
 
     // X192: TPC-H Q20-shape — LITERAL nested semi chain whose correlated
     // subquery re-reads the fact per (part, supplier); the engine folds
     // both sums into ONE conditional agg over a single fact scan.
     // Empty-1996 pairs drop in both engines (NULL comparison ⟂ false)
-    "q201_excess_stock" ->
+    QueryDef("q201_excess_stock", StarQueries.q201ExcessStock(_, _),
       """SELECT s_suppkey, s_name FROM supplier
          WHERE s_suppkey IN (
            SELECT ps.l_suppkey
@@ -3574,37 +3584,37 @@ object CorpusOracles {
                                AND l2.l_suppkey = ps.l_suppkey
                                AND l2.l_shipdate >= DATE '1996-01-01'
                                AND l2.l_shipdate < DATE '1997-01-01'))
-         ORDER BY s_suppkey""",
+         ORDER BY s_suppkey"""),
 
     // X193: CUBE multi-grain aggregate — GROUPING() bitmask (first
     // column most significant, the Postgres convention both engines
     // share) disambiguates lattice NULLs from data NULLs; exact cents
-    "q202_cube_aggs" ->
+    QueryDef("q202_cube_aggs", StarQueries.q202CubeAggs(_, _),
       """SELECT GROUPING(l_returnflag, l_linestatus) AS gid,
                 l_returnflag, l_linestatus, count(*) AS n,
                 CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
                   AS cents
          FROM lineitem
          GROUP BY CUBE(l_returnflag, l_linestatus)
-         ORDER BY gid, l_returnflag, l_linestatus""",
+         ORDER BY gid, l_returnflag, l_linestatus"""),
 
     // X194: TPC-H Q13-shape — the LITERAL left-join double aggregation;
     // the zero-order bucket is the point (an inner join would drop it),
     // and the engine's aggregate-before-join rewrite must reproduce it
     // through the zero-coalesced left join of counts
-    "q203_order_count_hist" ->
+    QueryDef("q203_order_count_hist", StarQueries.q203OrderCountHist(_, _),
       """SELECT c_count, count(*) AS n_customers FROM (
            SELECT c_custkey, count(o_orderkey) AS c_count
            FROM customer LEFT JOIN orders
              ON c_custkey = o_custkey AND o_orderpriority = '1-URGENT'
            GROUP BY 1)
-         GROUP BY 1 ORDER BY n_customers DESC, c_count DESC""",
+         GROUP BY 1 ORDER BY n_customers DESC, c_count DESC"""),
 
     // X195: TPC-H Q7-shape — the LITERAL disjunctive two-nation pair
     // predicate; the engine plans IN-filtered broadcast dims + a
     // post-join inequality filter (never a cartesian), which must
     // hash-match this OR form
-    "q204_volume_shipping" ->
+    QueryDef("q204_volume_shipping", StarQueries.q204VolumeShipping(_, _),
       """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                 year(l_shipdate) AS l_year,
                 CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
@@ -3619,7 +3629,7 @@ object CorpusOracles {
          JOIN nation n2 ON c_nationkey = n2.n_nationkey
          WHERE (n1.n_name = 'NATION_18' AND n2.n_name = 'NATION_19')
             OR (n1.n_name = 'NATION_19' AND n2.n_name = 'NATION_18')
-         GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
+         GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""),
 
     // X196: image perceptual hashes — the q37/q192 deterministic-twin
     // convention for the IMAGE codec: the engine round-trips a real PNG
@@ -3627,28 +3637,28 @@ object CorpusOracles {
     // grid, the 8x8 block means (floor division), and both 56-bit
     // hashes from the synthesis parameters via generate_series —
     // integer arithmetic end-to-end, never a byte of PNG
-    "q205_image_phash" ->
+    QueryDef("q205_image_phash", CorpusQueries.imagePHash(_, _),
       s"""WITH $imagePHashCtes
          SELECT doc_id, 32::BIGINT AS width, 32::BIGINT AS height,
                 ahash, dhash
-         FROM ph ORDER BY doc_id""",
+         FROM ph ORDER BY doc_id"""),
 
     // X197: image near-dup — the literal all-pairs hamming join over
     // the replayed dHashes; the engine's pigeonhole banding
     // (recall 1 by construction) must hash-match it exactly
-    "q206_image_neardup" ->
+    QueryDef("q206_image_neardup", CorpusQueries.imageNearDup(_, _),
       s"""WITH $imagePHashCtes
          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                 bit_count(xor(a.dhash, b.dhash))::BIGINT AS hamming
          FROM ph a JOIN ph b ON a.doc_id < b.doc_id
          WHERE bit_count(xor(a.dhash, b.dhash)) <= 3
-         ORDER BY doc_a, doc_b""",
+         ORDER BY doc_a, doc_b"""),
 
     // X198: the NOT-IN-with-NULL trap, LITERAL three-valued-logic form —
     // the first variant's subquery contains NULLs, so NOT IN is never
     // TRUE and its count is 0; the engine's broadcast-null-guard +
     // LeftAnti rewrite must reproduce all three variants
-    "q207_notin_null_census" ->
+    QueryDef("q207_notin_null_census", StarQueries.q207NotInNullCensus(_, _),
       """WITH sub AS (SELECT CASE WHEN o_orderstatus = 'F' THEN o_custkey END AS k
                       FROM orders),
          t AS (SELECT 'not_in_with_nulls' AS variant, count(*) AS n_rows,
@@ -3661,13 +3671,13 @@ object CorpusOracles {
                FROM customer WHERE c_custkey IN (SELECT k FROM sub))
          SELECT variant, n_rows::BIGINT AS n_rows, chk::BIGINT AS chk
          FROM (SELECT * FROM t UNION ALL SELECT * FROM g UNION ALL SELECT * FROM p)
-         ORDER BY variant""",
+         ORDER BY variant"""),
 
     // X199: null-safe equality join (IS NOT DISTINCT FROM) vs the
     // null-dropping plain join — divergence pinned row-for-row (the
     // NULL-key group exists only in the nullsafe variant); both sides
     // pre-aggregated so the null groups multiply as counts
-    "q208_nullsafe_join" ->
+    QueryDef("q208_nullsafe_join", StarQueries.q208NullSafeJoin(_, _),
       """WITH a AS (SELECT CASE WHEN o_custkey % 100 <> 13 THEN o_custkey % 100 END AS k,
                            count(*) AS na
                     FROM orders GROUP BY 1),
@@ -3679,34 +3689,34 @@ object CorpusOracles {
                UNION ALL
                SELECT 'plain', a.k, na * nb FROM a JOIN b ON a.k = b.k)
          SELECT variant, key, n_pairs::BIGINT AS n_pairs
-         FROM u ORDER BY variant, key NULLS FIRST""",
+         FROM u ORDER BY variant, key NULLS FIRST"""),
 
     // X200 (round 10, REAL): frame extraction — 1 container blob → N
     // DECODED PNG frames, each reduced to its perceptual hashes; the
     // twin replays every frame's grid from (doc_id, frame_no)
     // arithmetic, never a container byte
-    "q209_frame_sample" ->
+    QueryDef("q209_frame_sample", CorpusQueries.frameSample(_, _),
       s"""WITH $framePHashCtes
          SELECT doc_id, frame_no::BIGINT AS frame_no,
                 32::BIGINT AS width, 32::BIGINT AS height, ahash, dhash
-         FROM fph ORDER BY doc_id, frame_no""",
+         FROM fph ORDER BY doc_id, frame_no"""),
 
     // X202: TPC-H Q16-shape — the LITERAL NOT IN + count(DISTINCT)
     // form (null-free subquery: the plain-anti-join half of the
     // NOT-IN census; q207 pins the null half)
-    "q211_supplier_count_by_part" ->
+    QueryDef("q211_supplier_count_by_part", StarQueries.q211SupplierCountByPart(_, _),
       """SELECT p_brand, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
          FROM lineitem JOIN part ON l_partkey = p_partkey
          WHERE p_brand <> 'Brand#1' AND p_size IN (1, 5, 9, 13, 21, 30)
            AND l_suppkey NOT IN
              (SELECT s_suppkey FROM supplier WHERE s_name LIKE '%7')
-         GROUP BY 1, 2 ORDER BY supplier_cnt DESC, p_brand, p_size""",
+         GROUP BY 1, 2 ORDER BY supplier_cnt DESC, p_brand, p_size"""),
 
     // X203: TPC-H Q19-shape — the LITERAL OR of per-brand
     // (size band × quantity band) conjunctions; the engine's
     // union-pushed broadcast dim + post-join disjunction filter must
     // hash-match it
-    "q212_banded_revenue" ->
+    QueryDef("q212_banded_revenue", StarQueries.q212BandedRevenue(_, _),
       """SELECT p_brand,
                 CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
                      (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
@@ -3719,23 +3729,23 @@ object CorpusOracles {
                 AND l_quantity BETWEEN 10 AND 25)
             OR (p_brand = 'Brand#4' AND p_size BETWEEN 1 AND 30
                 AND l_quantity BETWEEN 20 AND 35)
-         GROUP BY 1 ORDER BY 1""",
+         GROUP BY 1 ORDER BY 1"""),
 
     // X201 (round 10, REAL): raster downscale — decode, 2× integer
     // block-mean decimation, PNG re-encode, re-decode, perceptual
     // hashes of the 16×16 result; the twin replays both floor stages
-    "q210_blob_resize" ->
+    QueryDef("q210_blob_resize", CorpusQueries.blobResize(_, _),
       s"""WITH $resizePHashCtes
          SELECT doc_id, 16::BIGINT AS width, 16::BIGINT AS height,
                 ahash, dhash
-         FROM rph ORDER BY doc_id""",
+         FROM rph ORDER BY doc_id"""),
 
     // X205: the PROBE-side half of the NOT-IN NULL census (q207 pins
     // the subquery side): a nullable probe key under NOT IN silently
     // drops its NULL rows (NULL NOT IN nonempty = NULL), while the
     // anti-join/NOT EXISTS form KEEPS them — the literal three-valued
     // forms, one labeled count+checksum row each
-    "q213_notin_probe_null" ->
+    QueryDef("q213_notin_probe_null", StarQueries.q213NotInProbeNull(_, _),
       """WITH probe AS (SELECT c_custkey,
              CASE WHEN c_custkey % 97 <> 3 THEN c_custkey END AS pk
            FROM customer),
@@ -3749,23 +3759,23 @@ object CorpusOracles {
                WHERE NOT EXISTS (SELECT 1 FROM sub WHERE sub.k = probe.pk))
          SELECT variant, n_rows::BIGINT AS n_rows, chk::BIGINT AS chk
          FROM (SELECT * FROM t UNION ALL SELECT * FROM a)
-         ORDER BY variant""",
+         ORDER BY variant"""),
 
     // X206: audio near-dup — the literal all-pairs hamming join over
     // the replayed acoustic fingerprints; the engine's pigeonhole
     // banding over the decoded WAV stream must hash-match it
-    "q215_audio_neardup" ->
+    QueryDef("q215_audio_neardup", CorpusQueries.audioNearDup(_, _),
       s"""WITH $audioFpCtes
          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                 bit_count(xor(a.fp, b.fp))::BIGINT AS hamming
          FROM afp a JOIN afp b ON a.doc_id < b.doc_id
          WHERE bit_count(xor(a.fp, b.fp)) <= 3
-         ORDER BY doc_a, doc_b""",
+         ORDER BY doc_a, doc_b"""),
 
     // X204: fused two-hash image near-dup — the literal all-pairs OR
     // join over both replayed hashes; the engine's double banding pass
     // (recall 1 per hash by pigeonhole) must hash-match it
-    "q214_image_neardup_fused" ->
+    QueryDef("q214_image_neardup_fused", CorpusQueries.imageNearDupFused(_, _),
       s"""WITH $imagePHashCtes
          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                 bit_count(xor(a.ahash, b.ahash))::BIGINT AS a_hamming,
@@ -3773,13 +3783,13 @@ object CorpusOracles {
          FROM ph a JOIN ph b ON a.doc_id < b.doc_id
          WHERE bit_count(xor(a.ahash, b.ahash)) <= 3
             OR bit_count(xor(a.dhash, b.dhash)) <= 3
-         ORDER BY doc_a, doc_b""",
+         ORDER BY doc_a, doc_b"""),
 
     // X207: spatial radius join — the literal all-pairs distance join
     // over LCG-derived integer points (density held constant by scaling
     // the y-extent with the corpus count); the engine's grid-cell
     // banding must hash-match it, exact integer distances included
-    "q216_spatial_radius" ->
+    QueryDef("q216_spatial_radius", CorpusQueries.spatialRadius(_, _),
       """WITH n AS (SELECT count(*)::BIGINT AS n FROM documents),
          pts AS (SELECT doc_id AS id,
              ((doc_id * 1103515245 + 12345) // 65536) % 4096 AS x,
@@ -3791,14 +3801,14 @@ object CorpusOracles {
          FROM pts a JOIN pts b ON a.id < b.id
          WHERE (a.x - b.x) * (a.x - b.x)
                + (a.y - b.y) * (a.y - b.y) <= 64 * 64
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
 
     // X214: schema-drift ingest census — epoch membership replayed
     // from the source table by the staging rule (o_orderkey parity =
     // which files predate o_orderpriority); the engine side reads the
     // actual two-epoch files with mergeSchema, so equality here pins
     // "missing column reads as NULL exactly for pre-drift files"
-    "q220_schema_drift" ->
+    QueryDef("q220_schema_drift", StarQueries.q220SchemaDrift(_, _),
       """SELECT o_orderstatus AS status, count(*)::BIGINT AS n,
                 sum(CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 0 END)::BIGINT
                   AS n_pre_drift,
@@ -3808,11 +3818,11 @@ object CorpusOracles {
                                THEN o_orderpriority END)::BIGINT
                   AS n_priorities,
                 sum(o_orderkey)::BIGINT AS key_sum
-         FROM orders GROUP BY 1 ORDER BY 1""",
+         FROM orders GROUP BY 1 ORDER BY 1"""),
 
     // X208: first-order Markov transition matrix — lag over the
     // per-user (ts, event_id) order, cell counts, exact-ratio p_ppm
-    "q217_markov_transitions" ->
+    QueryDef("q217_markov_transitions", CorpusQueries.markovTransitions(_, _),
       """WITH seq AS (SELECT event_type,
              lag(event_type) OVER (PARTITION BY user_id
                                    ORDER BY ts, event_id) AS prev
@@ -3822,7 +3832,7 @@ object CorpusOracles {
                FROM seq WHERE prev IS NOT NULL GROUP BY 1, 2)
          SELECT src, dst, n,
                 (n * 1000000 // sum(n) OVER (PARTITION BY src))::BIGINT AS p_ppm
-         FROM t ORDER BY src, dst""",
+         FROM t ORDER BY src, dst"""),
 
     // X217: type-widening schema-drift census — epoch membership
     // replayed by the staging rule (o_orderkey parity); epoch-1 rows
@@ -3832,7 +3842,7 @@ object CorpusOracles {
     // files' actual narrowed values, not re-derived ones. cents are
     // rounded per value then summed as exact BIGINTs (no float
     // summation order in the hash, the q80 rule).
-    "q221_widened_drift" ->
+    QueryDef("q221_widened_drift", StarQueries.q221WidenedDrift(_, _),
       """SELECT o_orderstatus AS status, count(*)::BIGINT AS n,
                 sum(CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 0 END)::BIGINT
                   AS n_pre_drift,
@@ -3846,29 +3856,29 @@ object CorpusOracles {
                             ELSE o_totalprice END) * 100) AS BIGINT))::BIGINT
                   AS cents_sum,
                 sum(o_orderkey)::BIGINT AS key_sum
-         FROM orders GROUP BY 1 ORDER BY 1""",
+         FROM orders GROUP BY 1 ORDER BY 1"""),
 
     // X218: deliberate big-dim join regime (SortMergeJoin, no
     // broadcast — the plan assert lives in Round12Spec); decimal-exact
     // revenue per the q01 rule
-    "q222_bigdim_join" ->
+    QueryDef("q222_bigdim_join", StarQueries.q222BigDimJoin(_, _),
       """SELECT o_orderpriority, count(*)::BIGINT AS n_lines,
                 CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
                      (CAST(1 AS DECIMAL(18,2)) -
                       CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
                   AS revenue
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY 1 ORDER BY 1""",
+         GROUP BY 1 ORDER BY 1"""),
 
     // X220: epoch-pruned drift read — the engine reads ONLY the
     // epoch=2 partition (plan-asserted); the oracle replays its
     // membership by the staging parity rule (odd orderkey)
-    "q223_drift_prune" ->
+    QueryDef("q223_drift_prune", StarQueries.q223DriftPrune(_, _),
       """SELECT o_orderstatus AS status, count(*)::BIGINT AS n,
                 count(DISTINCT o_orderpriority)::BIGINT AS n_priorities,
                 sum(o_orderkey)::BIGINT AS key_sum
          FROM orders WHERE o_orderkey % 2 = 1
-         GROUP BY 1 ORDER BY 1""",
+         GROUP BY 1 ORDER BY 1"""),
 
     // X221: nested-struct drift census — the engine reads the staged
     // two-epoch corpus whose struct gained a field mid-corpus; the
@@ -3876,7 +3886,7 @@ object CorpusOracles {
     // staging parity rule, so equality pins "a missing NESTED field
     // reads as NULL exactly for pre-drift files". cents are rounded per
     // value then summed as exact BIGINTs (the q221 rule).
-    "q224_nested_drift" ->
+    QueryDef("q224_nested_drift", StarQueries.q224NestedDrift(_, _),
       """SELECT o_orderstatus AS status, count(*)::BIGINT AS n,
                 sum(CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 0 END)::BIGINT
                   AS n_pre_drift,
@@ -3886,12 +3896,12 @@ object CorpusOracles {
                 sum(CAST(round(o_totalprice * 100) AS BIGINT))::BIGINT
                   AS cents_sum,
                 sum(o_orderkey)::BIGINT AS key_sum
-         FROM orders GROUP BY 1 ORDER BY 1""",
+         FROM orders GROUP BY 1 ORDER BY 1"""),
 
     // X222: column-DROP drift census — the inverse of q220: the NULLs
     // sit on POST-drift files (odd keys), and the distinct-priority
     // count ranges over the PRE-drop half only
-    "q225_drop_drift" ->
+    QueryDef("q225_drop_drift", StarQueries.q225DropDrift(_, _),
       """SELECT o_orderstatus AS status, count(*)::BIGINT AS n,
                 sum(CASE WHEN o_orderkey % 2 = 1 THEN 1 ELSE 0 END)::BIGINT
                   AS n_post_drop,
@@ -3901,14 +3911,14 @@ object CorpusOracles {
                                THEN o_orderpriority END)::BIGINT
                   AS n_priorities,
                 sum(o_orderkey)::BIGINT AS key_sum
-         FROM orders GROUP BY 1 ORDER BY 1""",
+         FROM orders GROUP BY 1 ORDER BY 1"""),
 
     // X223: deterministically skewed big-dim SMJ — the skew rule
     // (orderkeys not divisible by 4 collapse to hot key 0, whose dim
     // row is the declared '0-HOT' entry) is replayed verbatim; the
     // result is independent of AQE's skew slicing, which is exactly
     // what makes the plan-level skew assert safe to gate
-    "q226_skewed_bigdim" ->
+    QueryDef("q226_skewed_bigdim", StarQueries.q226SkewedBigDim(_, _),
       """WITH f AS (SELECT CASE WHEN l_orderkey % 4 = 0 THEN l_orderkey
                                 ELSE 0 END AS k,
                            l_extendedprice, l_discount FROM lineitem),
@@ -3920,7 +3930,7 @@ object CorpusOracles {
                          (100 - CAST(round(l_discount * 100) AS BIGINT)))
                      AS DOUBLE) / 10000.0 AS revenue
          FROM f JOIN d USING (k)
-         GROUP BY 1 ORDER BY 1""",
+         GROUP BY 1 ORDER BY 1"""),
 
     // X224: CSV-face schema drift — the engine reads the staged
     // two-epoch CSV corpus (epoch-1: no o_orderpriority, whole-dollar
@@ -3930,7 +3940,7 @@ object CorpusOracles {
     // membership AND the integral-price round-trip from the flat
     // source table by the parity rule, so equality pins both the
     // addition-NULL and inference-widening semantics
-    "q227_csv_drift" ->
+    QueryDef("q227_csv_drift", StarQueries.q227CsvDrift(_, _),
       """SELECT o_orderstatus AS status, count(*)::BIGINT AS n,
                 sum(CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 0 END)::BIGINT
                   AS n_pre_drift,
@@ -3944,7 +3954,7 @@ object CorpusOracles {
                             ELSE o_totalprice END) * 100) AS BIGINT))::BIGINT
                   AS cents_sum,
                 sum(o_orderkey)::BIGINT AS key_sum
-         FROM orders GROUP BY 1 ORDER BY 1""",
+         FROM orders GROUP BY 1 ORDER BY 1"""),
 
     // X224 rename leg (round 15): epoch 2 renamed the price column
     // (total_price) AND widened it integer→double through inference;
@@ -3952,7 +3962,7 @@ object CorpusOracles {
     // widening. The oracle replays epoch membership + the integral
     // round-trip from the flat table; n_null_price replays as ZERO
     // nulls — the unification gate a forked (drop+add) read fails
-    "q228_csv_rename_drift" ->
+    QueryDef("q228_csv_rename_drift", StarQueries.q228CsvRenameDrift(_, _),
       """SELECT o_orderstatus AS status, count(*)::BIGINT AS n,
                 sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END)::BIGINT
                   AS n_null_price,
@@ -3963,12 +3973,6 @@ object CorpusOracles {
                             ELSE o_totalprice END) * 100) AS BIGINT))::BIGINT
                   AS cents_sum,
                 sum(o_orderkey)::BIGINT AS key_sum
-         FROM orders GROUP BY 1 ORDER BY 1""",
+         FROM orders GROUP BY 1 ORDER BY 1"""),
   )
-
-  // X101: the STREAMING composition of X91 (ingest-time near-dup gate,
-  // foreachBatch over a file stream) shares the batch oracle verbatim —
-  // batch independence makes it the exact gate; see the q107 comment.
-  val sql: Map[String, String] =
-    sqlBase + ("q120_streaming_neardup" -> sqlBase("q107_incremental_neardup"))
 }

@@ -11,7 +11,7 @@ import graft.streaming.CorpusStreams
 /** Training-data-pipeline extensions over `documents` / `embeddings`:
   * dedup (exact, n-gram Jaccard, MinHash+LSH, SimHash, embedding-cosine),
   * similarity search, and text analysis. Every query has an exact DuckDB
-  * oracle (see SparkEntry.oracleSql + OracleSqlGen).
+  * oracle, registered with it in CorpusOracles.defs.
   */
 object CorpusQueries {
 

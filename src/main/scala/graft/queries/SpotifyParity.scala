@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QueryDef, Tables}
 
 /** The reference's analysis workload (Q1–Q4 at
   * snowflake-pipeline-query/spotify-analysis.sql:92-126), hash-gated by
@@ -106,37 +106,37 @@ object SpotifyParity {
          SELECT album_id, 'Album ' || album_id AS album_name
          FROM (SELECT DISTINCT p_brand AS album_id FROM part))"""
 
-  val oracle: Map[String, String] = Map(
-    "q62_spotify_q1" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q62_spotify_q1", q1TrendingSongs(_, _),
       s"""$derivationCte
          SELECT song_id, song_name, artist_id, album_id, rank, scrape_date
          FROM songs
          WHERE scrape_date >= (SELECT max(scrape_date) FROM songs) - INTERVAL 7 DAY
          ORDER BY rank ASC, scrape_date, song_id
-         LIMIT 10""",
+         LIMIT 10"""),
 
-    "q63_spotify_q2" ->
+    QueryDef("q63_spotify_q2", q2AlbumPopularity(_, _),
       s"""$derivationCte
          SELECT s.album_id, a.album_name, s.scrape_date, AVG(s.rank) AS avg_rank
          FROM songs s JOIN album a ON s.album_id = a.album_id
          GROUP BY s.album_id, a.album_name, s.scrape_date
-         ORDER BY s.album_id, s.scrape_date""",
+         ORDER BY s.album_id, s.scrape_date"""),
 
-    "q64_spotify_q3" ->
+    QueryDef("q64_spotify_q3", q3TopArtists(_, _),
       s"""$derivationCte
          SELECT artist_id, COUNT(*) AS top_10_appearances
          FROM songs
          WHERE rank <= 10
          GROUP BY artist_id
          ORDER BY top_10_appearances DESC, artist_id
-         LIMIT 10""",
+         LIMIT 10"""),
 
-    "q65_spotify_q4" ->
+    QueryDef("q65_spotify_q4", q4ChartMovement(_, _),
       s"""$derivationCte
          SELECT scrape_date, rank
          FROM songs
          WHERE song_id = (SELECT song_id FROM songs GROUP BY song_id
                           ORDER BY count(*) DESC, song_id LIMIT 1)
-         ORDER BY scrape_date""",
+         ORDER BY scrape_date"""),
   )
 }

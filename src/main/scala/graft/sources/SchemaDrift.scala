@@ -382,17 +382,14 @@ object SchemaDrift {
     staged.computeIfAbsent((spark.sparkContext.applicationId, dir, "csvren"), { _ =>
       val out = tempCorpusDir("graft-schema-csvren")
       val o = graft.Tables.load(spark, dir, "orders")
-      def writeCsv(df: DataFrame, path: String): Unit =
-        df.write.mode("overwrite").option("header", "true")
-          .option("nullValue", "NULL").csv(path)
-      writeCsv(o.where(pmod(col("o_orderkey"), lit(2)) === 0)
+      Sinks.writeCsv(o.where(pmod(col("o_orderkey"), lit(2)) === 0)
         .select(col("o_orderkey"), col("o_orderstatus"),
           round(col("o_totalprice")).cast("long").as("o_totalprice")),
-        s"$out/epoch=1")
-      writeCsv(o.where(pmod(col("o_orderkey"), lit(2)) === 1)
+        s"$out/epoch=1", mode = "overwrite")
+      Sinks.writeCsv(o.where(pmod(col("o_orderkey"), lit(2)) === 1)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice").as("total_price")),
-        s"$out/epoch=2")
+        s"$out/epoch=2", mode = "overwrite")
       out
     })
 
@@ -400,17 +397,14 @@ object SchemaDrift {
     staged.computeIfAbsent((spark.sparkContext.applicationId, dir, "csv"), { _ =>
       val out = tempCorpusDir("graft-schema-csv")
       val o = graft.Tables.load(spark, dir, "orders")
-      def writeCsv(df: DataFrame, path: String): Unit =
-        df.write.mode("overwrite").option("header", "true")
-          .option("nullValue", "NULL").csv(path)
-      writeCsv(o.where(pmod(col("o_orderkey"), lit(2)) === 0)
+      Sinks.writeCsv(o.where(pmod(col("o_orderkey"), lit(2)) === 0)
         .select(col("o_orderkey"), col("o_orderstatus"),
           round(col("o_totalprice")).cast("long").as("o_totalprice")),
-        s"$out/epoch=1")
-      writeCsv(o.where(pmod(col("o_orderkey"), lit(2)) === 1)
+        s"$out/epoch=1", mode = "overwrite")
+      Sinks.writeCsv(o.where(pmod(col("o_orderkey"), lit(2)) === 1)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderpriority")),
-        s"$out/epoch=2")
+        s"$out/epoch=2", mode = "overwrite")
       out
     })
 

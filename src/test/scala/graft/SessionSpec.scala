@@ -63,10 +63,10 @@ class SessionSpec extends AnyFunSuite {
       .asScala.toMap
 
   test("oracle JSON parses back to oracleSql, control characters included") {
-    assert(parse(SparkEntry.oracleJson(SparkEntry.oracleSql.keys)) == SparkEntry.oracleSql)
-    val some = SparkEntry.oracleSql.keys.toSeq.sorted.take(3)
-    assert(parse(SparkEntry.oracleJson(some :+ "no_such_query")) ==
-      SparkEntry.oracleSql.filter { case (k, _) => some.contains(k) })
+    val all = SparkEntry.registry.map(d => d.name -> d.oracle)
+    assert(parse(SparkEntry.oracleJson(all.map(_._1))) == all.toMap)
+    val some = all.take(3)
+    assert(parse(SparkEntry.oracleJson(some.map(_._1) :+ "no_such_query")) == some.toMap)
     val tricky = Map("q\"1\\" -> "SELECT '\t' AS \"a\", '\u0001\r\n\u001f' AS b")
     assert(parse(SparkEntry.jsonObject(tricky)) == tricky)
   }

@@ -36,14 +36,30 @@ class StarQueriesSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("queries and oracleSql keys are in exact bijection") {
-    // the driver's correctness gate compares per NAME: a query without
-    // an oracle silently downgrades to rows-only, an oracle without a
-    // query is dead SQL — both are declaration bugs, not runtime ones
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q -- o).isEmpty, s"queries missing an oracle: ${(q -- o).toSeq.sorted}")
-    assert((o -- q).isEmpty, s"oracles without a query: ${(o -- q).toSeq.sorted}")
+  test("registry: 230 queries sorted by name, distinct names and qNN ids") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.size == 230)
+    assert(names == names.sorted)
+    assert(names.distinct == names)
+    assert(names.map(_.takeWhile(_ != '_')).distinct.size == names.size)
+    assert(SparkEntry.queries.keySet == names.toSet)
+    assert(SparkEntry.oracleSql == SparkEntry.registry.map(d => d.name -> d.oracle).toMap)
+  }
+
+  test("select: prefixes, exact names and token lists; an unknown token raises") {
+    import SparkEntry.select
+    def names(tokens: String*) = select(tokens).map(_.name)
+    assert(names("q6") == Seq("q60_domain_mix", "q61_row_ids", "q62_spotify_q1",
+      "q63_spotify_q2", "q64_spotify_q3", "q65_spotify_q4", "q66_rank_topk",
+      "q67_chunk_dedup", "q68_scd2", "q69_token_budget"))
+    assert(names("q94_token_pagerank") == Seq("q94_token_pagerank"))
+    // registry order, whatever the token order; blanks are ignored
+    assert(names(" q65_spotify_q4", "", "q00") == Seq("q00_counts", "q65_spotify_q4"))
+    assert(names("q").size == 230)
+    val e = intercept[IllegalArgumentException](select(Seq("q00", "q999", "x")))
+    assert(e.getMessage.contains("q999") && e.getMessage.contains("x"))
+    assert(!e.getMessage.contains("q00"))
+    intercept[IllegalArgumentException](select(Seq(" ", "")))
   }
 
   test("q00 counts match known sf0.001 cardinalities") {
