@@ -17,20 +17,11 @@ package graft
   *    (Tables.stageLayout) so scans fan out past the one-task-per-table
   *    cap. Measured on this box and REJECTED as the default (0 = off):
   *    N=32 was uniformly ~0.3 s/query SLOWER — per-task scheduling on
-  *    60+ small queries swamps the scan parallelism gained, the same
-  *    arithmetic that killed the hot-table cache. At real data sizes the
-  *    multi-file layout is simply what ingest produces; at sf0.1 the
-  *    single-task scan is the faster physical plan;
-  *  - cold-file scans by default: every timed run re-reads the parquet.
-  *    SPARK_GRAFT_CACHE_TABLES=1 instead pins the ten tables hot in the
-  *    block-manager cache (Spark's CACHE TABLE), repartitioned to the
-  *    core count. Measured on this box the hot mode LOSES on the suite
-  *    total (32.5 s cold vs 43.4 s hot at sf0.1): the 32-way cached
-  *    relations defeat AQE's scan-stage coalescing, and 55 queries ×
-  *    more tasks × ~ms scheduling each outweighs the parquet decode
-  *    saved — single-query hot latency (QBench) is ~2× better, so the
-  *    mode stays for serving-shaped use. Query-level persisted RDDs are
-  *    swept after every query in both modes;
+  *    60+ small queries swamps the scan parallelism gained. At real data
+  *    sizes the multi-file layout is simply what ingest produces; at
+  *    sf0.1 the single-task scan is the faster physical plan;
+  *  - cold-file scans: every timed run re-reads the parquet, and what a
+  *    query persisted is swept after it (Session.sweep);
   *  - per-query time = MIN over three timed passes: on a 32-thread
   *    shared box, scheduler hiccups add 1-3 s to a random query per pass
   *    (measured run-to-run variance ±20% with a different victim each
@@ -72,14 +63,10 @@ object Bench {
       SparkEntry.queries(name)(spark, runDir)
         .write.format("noop").mode("overwrite").save()
 
-    // RDD ids of the pinned tables: everything else persisted during a
-    // query is query-local state and gets swept after it (Session.sweep
-    // also exempts the session-shared curation artifact). Its
-    // derivation cost is paid inside whichever query touches the
-    // artifact first (the untimed warmup pass, by the same rule that
-    // amortizes JIT and parquet footers).
-    val pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    def sweep(): Unit = Session.sweep(spark, pinned)
+    // The curation artifact Session.sweep exempts is derived inside the
+    // first query that touches it: the untimed warmup pass, by the rule
+    // that amortizes JIT and parquet footers.
+    def sweep(): Unit = Session.sweep(spark)
 
     names.foreach { name => // warmup pass, untimed (see methodology above)
       try run(name) catch { case _: Throwable => () }
@@ -190,22 +177,14 @@ object Bench {
     // it can never evict another stream's working set, unlike a
     // clearCache). Without it, 220 queries × their whole-stream persists
     // accumulate until the pass ends — the round-10 driver window
-    // measured 30.3 GB peak heap vs 18.1 at 8 streams, the exact
-    // pressure profile this bounds. SPARK_GRAFT_TP_SCOPED=0 pins the
-    // accumulate-then-sweep behavior for A/Bs.
-    val tpScoped = !sys.env.get("SPARK_GRAFT_TP_SCOPED").contains("0")
+    // measured 30.3 GB peak heap vs 18.1 at 8 streams.
     def throughputPass(streams: Int): Double = {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(streams)
       val t0 = System.nanoTime()
       names.foreach { name =>
-        pool.submit(new Runnable {
-          def run(): Unit =
-            try {
-              def go(): Unit = SparkEntry.queries(name)(spark, runDir)
-                .write.format("noop").mode("overwrite").save()
-              if (tpScoped) graft.Caching.scoped(go()) else go()
-            } catch { case _: Throwable => () }
-        })
+        val task: Runnable = () =>
+          try graft.Caching.scoped(run(name)) catch { case _: Throwable => () }
+        pool.submit(task)
       }
       pool.shutdown()
       pool.awaitTermination(30, java.util.concurrent.TimeUnit.MINUTES)

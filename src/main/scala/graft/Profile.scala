@@ -59,7 +59,6 @@ object Profile {
     val sfDir = Session.sfDir
     val spark = Session.build()
     val runDir = Session.input(spark, sfDir)
-    val pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, runDir)
         .write.format("noop").mode("overwrite").save()
@@ -67,7 +66,7 @@ object Profile {
       val t0 = System.nanoTime()
       run(name)
       val dt = (System.nanoTime() - t0) / 1e9
-      Session.sweep(spark, pinned)
+      Session.sweep(spark)
       dt
     }
 
@@ -78,7 +77,7 @@ object Profile {
       }
       case Some("--jobs") => jobs(spark, names, reps, timed)
       case Some("--alloc") => alloc(names, reps, sfDir, run,
-        () => Session.sweep(spark, pinned))
+        () => Session.sweep(spark))
       case _ => names.foreach { n =>
         (1 to reps).foreach(i => println(f"[qbench] $n rep $i: ${timed(n)}%.2f s"))
       }

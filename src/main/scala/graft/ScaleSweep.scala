@@ -190,11 +190,8 @@ object ScaleSweep {
     // session-shared CurationOps artifacts (near-dup pairs, BPE model,
     // kNN graph) are memoized with localCheckpoint-pinned RDDs whose
     // memo entries survive the sweep (the r8 sweep's q191/q120 aborts
-    // came from destroying them). Same exemption contract as Bench:
-    // anything persisted BEFORE the timing loop plus
-    // CurationOps.pinnedRddIds.
-    val preloopPinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    def sweep(): Unit = Session.sweep(spark, preloopPinned)
+    // came from destroying them); Session.sweep exempts them.
+    def sweep(): Unit = Session.sweep(spark)
 
     def timeOne(name: String, dir: String): (Double, Boolean) = {
       def once(): (Double, Boolean) = {

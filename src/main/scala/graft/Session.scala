@@ -12,14 +12,13 @@ import org.apache.spark.sql.SparkSession
   * Environment knobs:
   *  - SPARK_GRAFT_CPUS: local cores (default: the JVM's available
   *    processors);
-  *  - SPARK_GRAFT_SHUFFLE_PARTITIONS: default 8 (reason at `base`);
-  *  - SPARK_GRAFT_CONF="k=v;k=v": experiment overrides, applied last;
-  *  - SPARK_GRAFT_SF_DIR, SPARK_GRAFT_STAGE_FILES,
-  *    SPARK_GRAFT_CACHE_TABLES: the input a harness reads (see [[input]]
-  *    and Bench's methodology).
+  *  - SPARK_GRAFT_CONF="k=v;k=v": experiment overrides, applied last
+  *    (e.g. `spark.sql.shuffle.partitions=32` over the base 8);
+  *  - SPARK_GRAFT_SF_DIR, SPARK_GRAFT_STAGE_FILES: the input a harness
+  *    reads (see [[input]] and Bench's methodology).
   */
 object Session {
-  def cpus(env: Map[String, String]): Int =
+  private def cpus(env: Map[String, String]): Int =
     env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors)
 
@@ -33,7 +32,7 @@ object Session {
     // on 60+ small queries); heavy operators pin their own spread where
     // it matters. At cluster SFs this knob scales with volume per the
     // usual partitions ≈ bytes/128MB sizing.
-    "spark.sql.shuffle.partitions" -> env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8"),
+    "spark.sql.shuffle.partitions" -> "8",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.extensions" -> "graft.GraftExtensions",
     "spark.sql.adaptive.enabled" -> "true",
@@ -77,36 +76,30 @@ object Session {
   def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
   /** The directory a harness reads for `sfDir`: the N-file staged copy
-    * under SPARK_GRAFT_STAGE_FILES=N (default 0 = off), with the ten
-    * tables pinned hot under SPARK_GRAFT_CACHE_TABLES=1. Both modes and
-    * why they are off by default are in Bench's methodology. */
+    * under SPARK_GRAFT_STAGE_FILES=N (default 0 = off; why it is off by
+    * default is in Bench's methodology). */
   def input(spark: SparkSession, sfDir: String): String = {
     val stageFiles = sys.env.getOrElse("SPARK_GRAFT_STAGE_FILES", "0").toInt
-    val runDir =
-      if (stageFiles <= 0) sfDir
-      else {
-        val staged = new java.io.File(
-          "target/bench-staged/" + new java.io.File(sfDir).getName).getAbsolutePath
-        Tables.stageLayout(spark, sfDir, staged, stageFiles)
-        staged
-      }
-    if (sys.env.get("SPARK_GRAFT_CACHE_TABLES").contains("1"))
-      Tables.hotCache(spark, runDir, cpus(sys.env))
-    runDir
+    if (stageFiles <= 0) sfDir
+    else {
+      val staged = new java.io.File(
+        "target/bench-staged/" + new java.io.File(sfDir).getName).getAbsolutePath
+      Tables.stageLayout(spark, sfDir, staged, stageFiles)
+      staged
+    }
   }
 
-  /** Unpersist everything a query persisted, except `pinned` (the RDDs a
-    * harness cached before its loop, e.g. the hot tables) and the
-    * session-shared curation artifact (graft.operators.CurationOps): the
-    * near-dup pair/component tables are cross-query state by design (a
-    * cluster curation run materializes them once between stages and
-    * feeds dedup/keeper/overlap/reweighting from storage), and their
-    * memo entries outlive a sweep — destroying their blocks while the
-    * memo still points at them turns every later reuse into
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. The pinned id set is read per
+  /** Unpersist everything a query persisted, except the session-shared
+    * curation artifact (graft.operators.CurationOps): the near-dup
+    * pair/component tables are cross-query state by design (a cluster
+    * curation run materializes them once between stages and feeds
+    * dedup/keeper/overlap/reweighting from storage), and their memo
+    * entries outlive a sweep — destroying their blocks while the memo
+    * still points at them turns every later reuse into
+    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. The exempt id set is read per
     * sweep: the memo grows as queries first touch it. */
-  def sweep(spark: SparkSession, pinned: Set[Int]): Unit = {
-    val keep = pinned ++ graft.operators.CurationOps.pinnedRddIds
+  def sweep(spark: SparkSession): Unit = {
+    val keep = graft.operators.CurationOps.pinnedRddIds
     spark.sparkContext.getPersistentRDDs
       .filterNot { case (id, _) => keep(id) }
       .values.foreach(_.unpersist(blocking = false))

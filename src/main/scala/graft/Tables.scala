@@ -20,17 +20,13 @@ object Tables {
   // (schema inference) and re-lists the path on every call — per-QUERY
   // driver latency a real engine pays once at table registration. Cache
   // the resolved plan per (session, dir, table); logical plans are
-  // immutable, so reuse across queries is safe. (Files changing under a
-  // live session need an explicit `invalidate`, same as Spark's own
-  // catalog REFRESH TABLE.)
+  // immutable, so reuse across queries is safe.
   // Outer map is weak-keyed by the session itself (reference identity):
   // entries — and the cached plans bound to that session — die with it,
   // and a new session can never collide with a stopped one's cache.
   private val resolved =
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]()
-
-  def invalidate(): Unit = resolved.synchronized(resolved.clear())
 
   private def sessionCache(spark: SparkSession) = resolved.synchronized {
     var m = resolved.get(spark)
@@ -193,17 +189,4 @@ object Tables {
     marker.getParentFile.mkdirs()
     java.nio.file.Files.writeString(marker.toPath, recipe + "\n")
   }
-
-  /** Pin every table hot in the block-manager cache (Spark's CACHE TABLE),
-    * re-sliced to `partitions` so cached scans parallelize even when the
-    * on-disk file is a single row group (the local-SF layout). Subsequent
-    * `load` calls resolve to the hot copy. Benchmark/serving-session
-    * feature — at 100 TB you'd pin dimensions, not facts. */
-  def hotCache(spark: SparkSession, dir: String, partitions: Int): Unit =
-    names.foreach { n =>
-      val hot = load(spark, dir, n).repartition(partitions)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      hot.count() // materialize now, not on first query
-      sessionCache(spark).put((dir, n), hot)
-    }
 }

@@ -51,8 +51,10 @@ object Runner {
   /** Run one daily batch: landingDir *.json files → out/{album,artist,songs}. */
   def runBatch(spark: SparkSession, landingDir: String, outDir: String,
       processedDir: Option[String] = None, alsoCsv: Boolean = false): Result = {
-    val raw = RawJsonReader.read(spark, landingDir)
-      .persist(StorageLevel.MEMORY_AND_DISK) // G1: parse once, fan out 3×
+    val read = RawJsonReader.read(spark, landingDir)
+    // the files read, archived after the writes (persist hides the scan)
+    val inputFiles = read.inputFiles.toSeq
+    val raw = read.persist(StorageLevel.MEMORY_AND_DISK) // G1: parse once, fan out 3×
     val rows = Seq("album", "artist", "songs").map(Observation(_))
     try {
       val writes = Seq(
@@ -70,7 +72,7 @@ object Runner {
 
     val Seq(nAlbum, nArtist, nSongs) = rows.map(_.get("n").asInstanceOf[Long])
     // archive only after every branch wrote (T3)
-    val archived = processedDir.map(Archiver.archive(spark, landingDir, _)).getOrElse(0)
+    val archived = processedDir.map(Archiver.archive(spark, inputFiles, _)).getOrElse(0)
     Result(nAlbum, nArtist, nSongs, archived)
   }
 

@@ -1,6 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.net.URI
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** File archival (SURVEY §2.1 S6, §2.10 T3).
@@ -15,18 +17,14 @@ import org.apache.spark.sql.SparkSession
   */
 object Archiver {
 
-  /** Move every file matching `glob` under `srcDir` into `dstDir`.
-    * Returns the number of files moved. */
-  def archive(spark: SparkSession, srcDir: String, dstDir: String,
-      suffix: String = ".json"): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new Path(srcDir)
-    val fs = src.getFileSystem(conf)
-    if (!fs.exists(src)) return 0
+  /** Move `files` (the URIs a read listed, `Dataset.inputFiles`) into
+    * `dstDir`, keeping their names. Returns the number of files moved. */
+  def archive(spark: SparkSession, files: Seq[String], dstDir: String): Int = {
     val dst = new Path(dstDir)
-    if (!fs.exists(dst)) fs.mkdirs(dst)
-    val files = fs.listStatus(src).filter(s => s.isFile && s.getPath.getName.endsWith(suffix))
-    files.foreach(s => fs.rename(s.getPath, new Path(dst, s.getPath.getName)))
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(dst)
+    files.map(f => new Path(new URI(f)))
+      .foreach(p => fs.rename(p, new Path(dst, p.getName)))
     files.length
   }
 }

@@ -65,6 +65,7 @@ class CorpusSpec extends AnyFunSuite {
     val bf = AnnSearch.bruteForceTopK(queries, corpus, k = 5)
       .select("query_id", "vec_id", "sim").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(bf.size == 10 * 5, "brute force returns k rows per query")
     val ivf = AnnSearch.ivfTopK(queries, corpus, k = 5, numCentroids = 22, nProbe = 8)
       .select("query_id", "vec_id", "sim").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
@@ -593,8 +594,10 @@ class CorpusSpec extends AnyFunSuite {
     // prototypicality on the same fixture: each cluster's seed IS its
     // centroid (score exactly 1.0, rank 1), and the integer keep rule
     // drops exactly the top 1/dropDenom per cluster
-    val proto = AnnSearch.prototypicality(corpus, numClusters = 3, dropDenom = 3)
-      .collect().map(r => r.getLong(0) ->
+    val protoDf = AnnSearch.prototypicality(corpus, numClusters = 3, dropDenom = 3)
+    assert(protoDf.columns.toSeq ==
+      Seq("vec_id", "centroid_id", "proto_score", "proto_rank", "n_cluster", "keep"))
+    val proto = protoDf.collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getDouble(2), r.getLong(3), r.getLong(4), r.getBoolean(5)))
       .toMap
     assert(proto.size == 7)

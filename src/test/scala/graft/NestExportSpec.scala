@@ -21,6 +21,8 @@ class NestExportSpec extends AnyFunSuite {
     val manRows = manifest.collect()
     assert(manRows.length == 9, "8 shard rows + 1 root row") // all shards hit
     assert(manRows.count(_.getLong(0) == -1L) == 1)
+    assert(manRows.find(_.getLong(0) == -1L).get.getLong(1) == src.count(),
+      "the root row counts every exported line")
 
     // 1. the export wrote REAL jsonl files under __shard=N/
     val shardDirs = new java.io.File(outDir).listFiles()

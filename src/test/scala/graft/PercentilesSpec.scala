@@ -31,7 +31,9 @@ class PercentilesSpec extends AnyFunSuite {
     df.orderBy("k").collect().map(_.toString).toSeq
 
   test("exactGridded is width-invariant and equals exact") {
-    val base = got(Percentiles.exact(rows, "k", "v", ps))
+    val exact = Percentiles.exact(rows, "k", "v", ps)
+    assert(exact.columns.toSeq == Seq("k", "p25", "p50", "p90") && exact.count() == 4)
+    val base = got(exact)
     Seq(0.5, 64.0, 7777.0).foreach { w =>
       assert(got(Percentiles.exactGridded(rows, "k", "v", ps, w)) == base,
         s"gridWidth=$w diverged")
@@ -45,6 +47,10 @@ class PercentilesSpec extends AnyFunSuite {
     assert(got(Percentiles.exactWeightedBucketed(cnts, "k", "v", "c", ps)) == base)
     assert(got(Percentiles.exactWeightedBucketed(cnts, "k", "v", "c", ps,
       numBuckets = 7)) == base)
+    // values 1,1,1,5: p50 sits at position 1.5, between two 1s
+    val small = Seq(("g", 1L, 3L), ("g", 5L, 1L)).toDF("k", "v", "c")
+    assert(Percentiles.exactWeighted(small, "k", "v", "c", Seq("p50" -> 0.5))
+      .head().getDouble(1) == 1.0)
   }
 
   test("valuesAtRanks probes the exact order statistics") {

@@ -54,6 +54,9 @@ class RetrievalSketchSpec extends AnyFunSuite {
     val out2 = Sketches.kmvDistinctChecked(df.repartition(17), "g", "h", k = 256, tol = 0.2)
       .collect()
     assert(out(0).getDouble(2) == out2(0).getDouble(2))
+    // a repeated hash counts once
+    val dup = Seq(("g", 7L), ("g", 7L), ("g", 9L)).toDF("k", "h")
+    assert(Sketches.kmvDistinctChecked(dup, "k", "h").head().getLong(1) == 2L)
   }
 
   // ------------------------------------------------- long-vector sum agg

@@ -49,5 +49,9 @@ class SamplingSpec extends AnyFunSuite {
     val enOnly = ids(Sampling.deterministicSample(
       docs.filter(col("lang") === "en"), "doc_id", 0.5))
     assert(ids(s.filter(col("lang") === "en")) == enOnly)
+    // defaultRate 0 drops every stratum the rates map does not name
+    assert(ids(Sampling.stratifiedSample(docs, "lang", "doc_id",
+      rates = Map("en" -> 1.0), defaultRate = 0.0)) ==
+      ids(docs.filter(col("lang") === "en")))
   }
 }

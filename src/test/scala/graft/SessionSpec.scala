@@ -26,7 +26,7 @@ class SessionSpec extends AnyFunSuite {
       "spark.ui.enabled" -> "false"))
     val cores = Runtime.getRuntime.availableProcessors
     assert(Session.conf(Map.empty).toMap.apply("spark.master") == s"local[$cores]")
-    assert(Session.conf(Map("SPARK_GRAFT_SHUFFLE_PARTITIONS" -> "37"))
+    assert(Session.conf(Map("SPARK_GRAFT_CONF" -> "spark.sql.shuffle.partitions=37"))
       .toMap.apply("spark.sql.shuffle.partitions") == "37")
   }
 
@@ -71,17 +71,28 @@ class SessionSpec extends AnyFunSuite {
     assert(parse(SparkEntry.jsonObject(tricky)) == tricky)
   }
 
-  test("src/main builds a SparkSession in exactly one place, Session.scala") {
+  private def mainSources: Seq[Path] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
-    val files = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
+    Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+  }
+
+  test("src/main builds a SparkSession in exactly one place, Session.scala") {
     // comments may show the call (GraftExtensions' usage note)
     def code(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
       .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
-    val sites = files.flatMap { p =>
+    val sites = mainSources.flatMap { p =>
       Seq.fill("SparkSession\\.builder\\(\\)".r.findAllMatchIn(code(p)).size)(p.getFileName.toString)
     }
     assert(sites == Seq("Session.scala"))
+  }
+
+  test("src/main reads exactly nine SPARK_GRAFT_ environment knobs") {
+    val knobs = mainSources.flatMap { p =>
+      "\"(SPARK_GRAFT_[A-Z0-9_]+)\"".r
+        .findAllMatchIn(new String(Files.readAllBytes(p), "UTF-8")).map(_.group(1))
+    }.toSet
+    assert(knobs == Set("CPUS", "CONF", "SF_DIR", "STAGE_FILES", "ONLY", "PASSES",
+      "STREAMS", "DUCKDB", "SWEEP_SF1").map("SPARK_GRAFT_" + _))
   }
 }

@@ -367,6 +367,25 @@ class SpotifyPipelineSpec extends AnyFunSuite {
     assert(res == Runner.Result(0, 0, 0, 0))
   }
 
+  test("runner: a pass archives exactly the files it read") {
+    val dir = SpotifyFixture.tempDir("graft-run-archive")
+    val l = SpotifyFixture.write(dir, Seq("2025-07-07", "2025-07-08"))
+    val landing = java.nio.file.Paths.get(l)
+    // an in-flight upload (the read skips dot-prefixed names) and a file
+    // outside the read's *.json glob
+    java.nio.file.Files.copy(landing.resolve("spotify_raw_20250707120000.json"),
+      landing.resolve(".spotify_raw_20250709120000.json"))
+    java.nio.file.Files.writeString(landing.resolve("notes.txt"), "not a raw file")
+    val processed = dir.resolve("processed")
+    val res = Runner.runBatch(spark, l, dir.resolve("out").toString, Some(processed.toString))
+    assert(res.songs == 100) // two files read, 50 items each
+    assert(res.archived == 2)
+    def names(d: java.nio.file.Path) = d.toFile.listFiles().map(_.getName).toSet
+    assert(names(processed) ==
+      Set("spotify_raw_20250707120000.json", "spotify_raw_20250708120000.json"))
+    assert(names(landing) == Set(".spotify_raw_20250709120000.json", "notes.txt"))
+  }
+
   test("runner: a failed write releases the parsed input from the cache") {
     val dir = SpotifyFixture.tempDir("graft-run-fail")
     val l = SpotifyFixture.write(dir, Seq("2025-07-04"))
